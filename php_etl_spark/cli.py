@@ -73,7 +73,12 @@ def main(argv: list[str] | None = None) -> int:
         return 0
     results = run_pipeline(spark, spec, state_path=args.state)
     for r in results:
-        print(json.dumps({"table": r.table, "rows_written": r.rows_written, "path": r.path}))
+        print(json.dumps({
+            "table": r.table,
+            "rows_written": r.rows_written,
+            "rows_quarantined": r.rows_quarantined,
+            "path": r.path,
+        }))
     if observability.metrics_path():
         for rec in observability.read_metrics():
             print(json.dumps(rec, sort_keys=True))

@@ -20,6 +20,12 @@ operator code is correct in both worlds:
 
 Select with the runtime conf ``spark.php_etl.materialize`` or env
 ``SPARK_GRAFT_MATERIALIZE``.
+
+Whatever the mode, ``materialize`` runs exactly one eager action over
+the input plan. Metrics the caller wants from that evaluation (row
+counts, partition sets) ride along as an ``Observation`` attached to
+the frame the action evaluates, so they cost no extra job and are
+ready, without blocking, when ``materialize`` returns.
 """
 
 from __future__ import annotations
@@ -27,7 +33,7 @@ from __future__ import annotations
 import os
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 CONF_KEY = "spark.php_etl.materialize"
 CHECKPOINT_DIR_KEY = "spark.php_etl.checkpoint_dir"
@@ -46,13 +52,25 @@ def _mode(df: DataFrame) -> str:
     return mode
 
 
-def materialize(df: DataFrame) -> DataFrame:
+def materialize(
+    df: DataFrame, observation: Observation | None = None, *exprs: Column
+) -> DataFrame:
     """Pin ``df``'s result and truncate its lineage, with the
-    fault-tolerance strategy picked by config (see module docstring)."""
+    fault-tolerance strategy picked by config (see module docstring).
+
+    With ``observation`` (and its aggregate ``exprs``, as for
+    ``DataFrame.observe``) the metrics are taken by the same eager
+    action that pins the frame; ``observation.get`` returns at once
+    afterwards. Raises if the action left them unset rather than let a
+    later ``get`` wait forever."""
     mode = _mode(df)
+
+    def observed(frame: DataFrame) -> DataFrame:
+        return frame.observe(observation, *exprs) if observation else frame
+
     if mode == "local":
-        return df.localCheckpoint(eager=True)
-    if mode == "persist":
+        out = observed(df).localCheckpoint(eager=True)
+    elif mode == "persist":
         # persist() pins BLOCKS but keeps the full logical plan;
         # operators that reference each round's result several times
         # (star-contraction reads the edge set ~4x per round) grow the
@@ -61,27 +79,36 @@ def materialize(df: DataFrame) -> DataFrame:
         # lineage (the plan becomes a LogicalRDD scan), and persisting
         # the REBUILT frame pins its blocks so the JVM→Python→JVM row
         # round-trip at the RDD boundary happens exactly once, in the
-        # eager count below — not on every downstream action (r4 had it
-        # per-evaluation: the persist sat on the source frame, so each
-        # action re-serialized every row from the persisted blocks).
+        # eager count below — not on every downstream action.
         # On executor loss, lost blocks recompute from the full lineage
         # including the round-trip — same guarantee, slower rebuild;
         # for very deep lineage use mode "checkpoint" instead.
         rebuilt = df.sparkSession.createDataFrame(df.rdd, df.schema)
         out = rebuilt.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()  # eager: populate before callers branch
+        # eager: populate before callers branch. The RDD conversion is
+        # not a SQL action, so an observation on ``df`` would never
+        # fire; it goes on the rebuilt frame, whose count fills the
+        # cache through it.
+        observed(rebuilt).count()
         out._php_etl_persisted_source = out  # for unmaterialize()
-        return out
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        ckdir = None
-        try:
-            ckdir = spark.conf.get(CHECKPOINT_DIR_KEY, None)
-        except Exception:  # noqa: BLE001
+    else:
+        spark = df.sparkSession
+        sc = spark.sparkContext
+        if sc.getCheckpointDir() is None:
             ckdir = None
-        sc.setCheckpointDir(ckdir or os.path.join(os.getcwd(), ".spark-checkpoints"))
-    return df.checkpoint(eager=True)
+            try:
+                ckdir = spark.conf.get(CHECKPOINT_DIR_KEY, None)
+            except Exception:  # noqa: BLE001
+                ckdir = None
+            sc.setCheckpointDir(
+                ckdir or os.path.join(os.getcwd(), ".spark-checkpoints")
+            )
+        out = observed(df).checkpoint(eager=True)
+    if observation is not None and observation._jo.getRowOrEmpty().isEmpty():
+        raise RuntimeError(
+            f"materialize ({mode}): the eager action left the observation unset"
+        )
+    return out
 
 
 def unmaterialize(df: DataFrame) -> None:

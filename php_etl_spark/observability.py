@@ -6,13 +6,13 @@ elapsed, rate, ETA) because its cursor loop owns the row stream. On
 Spark the engine owns the rows, so the equivalent surface is:
 
 - **per-table pipeline metrics**: each ``run_table`` appends a JSONL
-  record — table, rows written, bytes on disk, wall seconds, rows/sec
-  — to the path in ``SPARK_GRAFT_METRICS`` (or one passed
-  explicitly). The CLI prints the same records.
-- **in-plan counters** via ``DataFrame.observe``: row/byte counts
-  computed inside the job (no extra action, exact even under
-  re-execution), the Spark-native replacement for the reference's
-  per-row tick.
+  record — table, rows written and quarantined, bytes on disk, wall
+  seconds, rows/sec — to the path in ``SPARK_GRAFT_METRICS`` (or one
+  passed explicitly). The CLI prints the same records.
+- **in-plan counters** via ``DataFrame.observe``: each table's
+  written and quarantined row counts are observed by the one action
+  that pins its frame (``materialize``), the Spark-native replacement
+  for the reference's per-row tick.
 - **streaming progress** via a Python ``StreamingQueryListener``
   recording per-batch rows/sec from the engine's own
   ``StreamingQueryProgress`` — attach with ``attach_streaming_metrics``.
@@ -30,7 +30,7 @@ import time
 from contextlib import contextmanager
 from typing import Any, Iterator
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import SparkSession
 
 ENV_KEY = "SPARK_GRAFT_METRICS"
 
@@ -92,16 +92,6 @@ def table_metrics(
     if nbytes is not None:
         rec["bytes_written"] = nbytes
     emit(rec, path)
-
-
-def observed_count(df: DataFrame, name: str = "rows") -> tuple[DataFrame, Observation]:
-    """Attach an in-plan row/byte observation: counts are computed by
-    the SAME job that does the work (no second action over the data —
-    the scale-correct way to count what you write)."""
-    obs = Observation(name)
-    from pyspark.sql import functions as F
-
-    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def attach_streaming_metrics(

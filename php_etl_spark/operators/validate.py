@@ -13,8 +13,9 @@ same contracts are declared as data and checked set-oriented:
   against the referenced keys.
 
 ``check_constraints`` returns the audit report (rule, violations);
-``split_valid`` routes row-local violators to quarantine — the same
-split the reference does per-row, as two filters over one scan.
+``violation_flag`` is the one row-violation predicate: ``split_valid``
+filters on it, and the pipeline runner carries it as a column so the
+valid rows and the quarantine come out of one evaluation.
 """
 
 from __future__ import annotations
@@ -24,6 +25,8 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+_ROW_LOCAL = ("not_null", "range", "regex", "in_set")
 
 
 def _row_violation(rule: dict[str, Any]) -> Column:
@@ -63,7 +66,7 @@ def check_constraints(
     rows whose key misses the parent (``ref_df``/``ref_column``,
     NULLs pass — use not_null to forbid them)."""
     spark = df.sparkSession
-    row_rules = [r for r in rules if r["type"] in ("not_null", "range", "regex", "in_set")]
+    row_rules = [r for r in rules if r["type"] in _ROW_LOCAL]
     reports: list[DataFrame] = []
     if row_rules:
         agg = df.agg(
@@ -120,21 +123,32 @@ def check_constraints(
                 .select(F.lit(_rule_name(r)).alias("rule"), "violations")
             )
             reports.append(missing)
-        elif r["type"] not in ("not_null", "range", "regex", "in_set"):
+        elif r["type"] not in _ROW_LOCAL:
             raise ValueError(f"unknown rule type: {r['type']}")
     out = reduce(lambda a, b: a.unionByName(b), reports)
     _ = spark  # session kept for future rule types needing it
     return out
 
 
+def violation_flag(rules: list[dict[str, Any]]) -> Column | None:
+    """One boolean column, true where a row breaks any row-local rule
+    of ``rules``; ``None`` when none of them is row-local. A row whose
+    check is unknown (NULL) counts as a violator, so the flag splits a
+    frame exactly in two — no row is silently in neither side."""
+    row_rules = [r for r in rules if r["type"] in _ROW_LOCAL]
+    if not row_rules:
+        return None
+    bad = reduce(lambda a, b: a | b, [_row_violation(r) for r in row_rules])
+    return F.coalesce(bad, F.lit(True))
+
+
 def split_valid(
     df: DataFrame, rules: list[dict[str, Any]]
 ) -> tuple[DataFrame, DataFrame]:
     """(valid, quarantine) for the row-local subset of ``rules`` — two
-    complementary filters over one scan, the set-oriented version of
-    the reference's per-row skip-and-log."""
-    row_rules = [r for r in rules if r["type"] in ("not_null", "range", "regex", "in_set")]
-    if not row_rules:
+    complementary filters over one scan on ``violation_flag``, the
+    set-oriented version of the reference's per-row skip-and-log."""
+    bad = violation_flag(rules)
+    if bad is None:
         return df, df.limit(0)
-    bad = reduce(lambda a, b: a | b, [_row_violation(r) for r in row_rules])
     return df.filter(~bad), df.filter(bad)

@@ -2,27 +2,35 @@
 (/root/reference/sdk/src/ETLTask.php:28-72).
 
 Per table: scan (+pushed filter) → mapping projection → in-run
-first-wins dedup on the unique keys → anti-join against the
-destination's existing keys → batched write. The reference does this
-with a per-row cursor loop, an unbounded driver-memory dedup cache
-and one existence probe per row; here dedup is a shuffle and the
-destination probe one anti-join, so no driver memory grows with the
-data.
+first-wins dedup on the unique keys → validity flag → anti-join of
+keys that already landed (destination, quarantine) → batched write.
+The reference does this with a per-row cursor loop, an unbounded
+driver-memory dedup cache and one existence probe per row; here dedup
+is a shuffle and the destination probe one anti-join, so no driver
+memory grows with the data.
+
+Each table's transform plan is evaluated exactly once: the
+``materialize`` that pins it. Its row and violator counts are in-plan
+observations of that same action, and the quarantine write, the main
+write and the upsert all read the pinned frame — no side action
+recomputes it.
 """
 
 from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from php_etl_spark.functions.strings import dedup_key
-from php_etl_spark.materialize import materialize
+from php_etl_spark.materialize import materialize, unmaterialize
 from php_etl_spark.operators.agg import first_wins_dedup
 from php_etl_spark.operators.project import compile_mapping, source_columns
+from php_etl_spark.operators.validate import violation_flag
 from php_etl_spark.plans.spec import PipelineSpec, TableSpec
 from php_etl_spark.sources.readers import read_source
 from php_etl_spark.sources.writers import append, overwrite, upsert, _sink_path
@@ -34,6 +42,7 @@ class TableResult:
     rows_written: int
     path: str | None
     skipped: bool = False
+    rows_quarantined: int = 0
 
 
 def build_table_frame(
@@ -73,22 +82,11 @@ def build_table_frame(
     return projected.select(*out_cols)
 
 
-def _read_destination(
-    spark: SparkSession, conn: dict[str, Any], table: str
-) -> DataFrame | None:
-    """Read the sink's current rows for the idempotency anti-join, or
-    ``None`` when the destination doesn't exist yet. A directory left
-    behind by an interrupted write (exists but holds no parquet parts)
-    counts as absent instead of failing schema inference, so re-runs
-    stay idempotent."""
-    if conn.get("type") == "jdbc":
-        from php_etl_spark.sources.jdbc import read_jdbc_table
-
-        try:
-            return read_jdbc_table(spark, conn, table)
-        except Exception:  # noqa: BLE001 — table not created yet
-            return None
-    path = _sink_path(conn, table)
+def _read_parquet_dir(spark: SparkSession, path: str) -> DataFrame | None:
+    """Read a parquet sink directory, or ``None`` when it doesn't exist
+    yet. A directory left behind by an interrupted write (exists but
+    holds no parquet parts) counts as absent instead of failing schema
+    inference, so re-runs stay idempotent."""
     if not os.path.exists(path):
         return None
     has_parts = any(
@@ -99,6 +97,21 @@ def _read_destination(
     if not has_parts:
         return None
     return spark.read.parquet(path)
+
+
+def _read_destination(
+    spark: SparkSession, conn: dict[str, Any], table: str
+) -> DataFrame | None:
+    """Read the sink's current rows for the idempotency anti-join, or
+    ``None`` when the destination doesn't exist yet."""
+    if conn.get("type") == "jdbc":
+        from php_etl_spark.sources.jdbc import read_jdbc_table
+
+        try:
+            return read_jdbc_table(spark, conn, table)
+        except Exception:  # noqa: BLE001 — table not created yet
+            return None
+    return _read_parquet_dir(spark, _sink_path(conn, table))
 
 
 def run_table(
@@ -116,6 +129,7 @@ def run_table(
             _apply_maintenance(spark, table, result.path, rec)
         rec["mode"] = table.mode
         rec["rows_written"] = result.rows_written
+        rec["rows_quarantined"] = result.rows_quarantined
         rec["dest_path"] = result.path
     return result
 
@@ -159,74 +173,103 @@ def _apply_maintenance(
         }
 
 
+def _landed_keys(
+    spark: SparkSession,
+    table: TableSpec,
+    to_conn: dict[str, Any],
+    qpath: str | None,
+) -> DataFrame | None:
+    """Normalised unique keys that already landed, tagged ``__q`` by
+    where: the destination (false; append mode only, ETLTask's exists()
+    probe per row, /root/reference/sdk/src/ETLTask.php:43-53) and the
+    quarantine (true). A valid row is dropped when its key is in the
+    destination, a violator when its key is already quarantined, so a
+    re-run neither re-inserts nor re-quarantines. ``None`` when there is
+    nothing to probe — always for a table without unique keys, whose
+    rows have no identity: every run appends all of them again, to the
+    destination and to the quarantine alike."""
+    if not table.unique:
+        return None
+    sides = []
+    if table.mode == "append":
+        sides.append((False, _read_destination(spark, to_conn, table.destination)))
+    if qpath:
+        sides.append((True, _read_parquet_dir(spark, qpath)))
+    keys = [
+        landed.select(
+            *[dedup_key(F.col(k)).alias(f"__k{i}") for i, k in enumerate(table.unique)],
+            F.lit(q).alias("__q"),
+        )
+        for q, landed in sides
+        if landed is not None
+    ]
+    if not keys:
+        return None
+    return reduce(DataFrame.unionByName, keys).distinct()
+
+
 def _run_table(
     spark: SparkSession, spec: PipelineSpec, table: TableSpec
 ) -> TableResult:
-    frame = build_table_frame(spark, spec, table)
     to_conn = spec.conn_for(table, "to")
-
-    if table.constraints:
-        # declarative guards (the reference's per-row validity checks,
-        # e.g. /root/reference/sdk/migrate_assures.php:136-170, as one
-        # set-oriented split): violators either quarantine next to the
-        # destination or fail the table run before anything is written
-        from php_etl_spark.operators.validate import split_valid
-
-        frame, bad = split_valid(frame, table.constraints)
-        if table.on_violation == "fail":
-            n_bad = bad.count()
-            if n_bad:
-                raise ValueError(
-                    f"{table.destination}: {n_bad} constraint violations"
-                )
-        elif "path" in to_conn:
-            qpath = _sink_path(to_conn, table.destination) + "_quarantine"
-            if not bad.isEmpty():
-                bad.write.mode("append").parquet(qpath)
-
-    if table.mode == "upsert":
-        n = frame.count()
-        upsert(
-            spark,
-            frame,
-            to_conn,
-            table.destination,
-            keys=table.unique,
-            partition_by=table.partition_by or None,
-        )
-        return TableResult(table.destination, n, _sink_path(to_conn, table.destination))
-
-    if table.mode == "overwrite":
-        n = frame.count()
-        path = overwrite(frame, to_conn, table.destination)
-        return TableResult(table.destination, n, path)
-
-    # append mode: anti-join against destination's existing unique
-    # keys (ETLTask's exists() probe per row → one left-anti join,
-    # /root/reference/sdk/src/ETLTask.php:43-53)
     dest_path = _sink_path(to_conn, table.destination)
-    existing = _read_destination(spark, to_conn, table.destination)
-    if table.unique and existing is not None:
-        norm = lambda c: dedup_key(c)  # noqa: E731
-        on = [
-            norm(F.col(k)).eqNullSafe(norm(F.col(f"__e_{k}"))) for k in table.unique
-        ]
-        ekeys = existing.select(
-            *[F.col(k).alias(f"__e_{k}") for k in table.unique]
-        ).dropDuplicates()
-        cond = on[0]
-        for c in on[1:]:
-            cond = cond & c
-        frame = frame.join(ekeys, on=cond, how="left_anti")
-    frame = materialize(frame)
-    # in-plan observation: the write job itself counts the rows — no
-    # second action over the frame
-    from php_etl_spark.observability import observed_count
+    # declarative guards (the reference's per-row validity checks,
+    # e.g. /root/reference/sdk/migrate_assures.php:136-170, as one
+    # set-oriented flag): violators either quarantine next to a file
+    # destination or fail the table run before anything is written
+    bad = violation_flag(table.constraints)
+    qpath = (
+        dest_path + "_quarantine"
+        if bad is not None and table.on_violation != "fail" and "path" in to_conn
+        else None
+    )
+    frame = build_table_frame(spark, spec, table).withColumn(
+        "__bad", bad if bad is not None else F.lit(False)
+    )
+    landed = _landed_keys(spark, table, to_conn, qpath)
+    if landed is not None:
+        cond = reduce(
+            lambda a, b: a & b,
+            [
+                dedup_key(F.col(k)).eqNullSafe(F.col(f"__k{i}"))
+                for i, k in enumerate(table.unique)
+            ],
+            F.col("__bad") == F.col("__q"),
+        )
+        frame = frame.join(landed, on=cond, how="left_anti")
 
-    frame, obs = observed_count(frame)
-    append(frame, to_conn, table.destination)
-    n = obs.get["rows"]
-    return TableResult(table.destination, n, dest_path)
+    obs = Observation()
+    pinned = materialize(
+        frame,
+        obs,
+        F.count(F.when(~F.col("__bad"), 1)).alias("rows"),
+        F.count(F.when(F.col("__bad"), 1)).alias("bad"),
+    )
+    n, n_bad = obs.get["rows"], obs.get["bad"]
+    try:
+        if n_bad and table.on_violation == "fail":
+            raise ValueError(f"{table.destination}: {n_bad} constraint violations")
+        if n_bad and qpath:
+            pinned.filter("__bad").drop("__bad").write.mode("append").parquet(qpath)
+        good = pinned.filter(~F.col("__bad")).drop("__bad")
+        if table.mode == "upsert":
+            upsert(
+                spark,
+                good,
+                to_conn,
+                table.destination,
+                keys=table.unique,
+                partition_by=table.partition_by or None,
+            )
+        elif table.mode == "overwrite":
+            dest_path = overwrite(good, to_conn, table.destination)
+        else:
+            append(good, to_conn, table.destination)
+    finally:
+        unmaterialize(pinned)
+    return TableResult(
+        table.destination, n, dest_path, rows_quarantined=n_bad if qpath else 0
+    )
 
 
 def _table_fingerprint(spec: PipelineSpec, table: TableSpec) -> str:

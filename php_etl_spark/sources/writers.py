@@ -21,7 +21,7 @@ import uuid
 from collections.abc import Sequence
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from php_etl_spark.materialize import materialize
@@ -155,7 +155,6 @@ def restore_backup(path: str) -> str:
 
 
 def _touched_partitions(
-    spark: SparkSession,
     existing: DataFrame,
     updates: DataFrame,
     keys: Sequence[str],
@@ -164,19 +163,14 @@ def _touched_partitions(
     """Distinct partition tuples an upsert must rewrite: partitions
     the update rows land in, plus partitions currently holding a
     matched key (a key whose partition value changes must have its OLD
-    partition rewritten too). Both scans are column-pruned to
-    key+partition columns; the result is bounded by the partition
-    count, so collecting it to the driver is O(partitions), not
-    O(rows)."""
+    partition rewritten too). One aggregate over both column-pruned
+    scans; its single row holds a set bounded by the partition count,
+    so collecting it is O(partitions), not O(rows)."""
     pcols = list(partition_by)
-    from_updates = updates.select(*pcols).distinct()
-    from_matched = (
-        existing.join(updates.select(*keys).distinct(), on=list(keys), how="left_semi")
-        .select(*pcols)
-        .distinct()
-    )
-    rows = from_updates.unionByName(from_matched).distinct().collect()
-    return [tuple(r[c] for c in pcols) for r in rows]
+    matched = existing.join(updates.select(*keys), on=list(keys), how="left_semi")
+    both = updates.select(*pcols).unionByName(matched.select(*pcols))
+    (row,) = both.agg(F.collect_set(F.struct(*pcols)).alias("p")).collect()
+    return [tuple(p) for p in row["p"]]
 
 
 def _partition_filter(partition_by: Sequence[str], touched: list[tuple]) -> Column:
@@ -203,15 +197,18 @@ def _partition_scoped_rewrite(
     are left byte-identical (asserted in tests/test_pipeline.py). On
     Delta/Iceberg the same call maps to MERGE INTO / replaceWhere."""
     existing = spark.read.parquet(path)
-    touched = _touched_partitions(spark, existing, incoming, keys, partition_by)
-    if not touched:
-        result = materialize(incoming)
-    else:
+    touched = _touched_partitions(existing, incoming, keys, partition_by)
+    if touched:
         flt = _partition_filter(partition_by, touched)
         # static isin-style pruning: the filter is on partition columns
         # only, so the scan reads just the touched directories
-        scoped = existing.filter(flt)
-        result = materialize(combine(scoped, incoming, keys))
+        incoming = combine(existing.filter(flt), incoming, keys)
+    # the pinning action also records which partitions the result holds
+    obs = Observation()
+    result = materialize(
+        incoming, obs, F.collect_set(F.struct(*partition_by)).alias("p")
+    )
+    present = {tuple(p) for p in obs.get["p"]}
     with _conf_override(
         spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
     ):
@@ -219,10 +216,6 @@ def _partition_scoped_rewrite(
     # dynamic overwrite only replaces partitions PRESENT in the result;
     # a touched partition left with zero rows (its only row moved
     # partitions) must be dropped explicitly or its stale file survives
-    present = {
-        tuple(r[c] for c in partition_by)
-        for r in result.select(*partition_by).distinct().collect()
-    }
     for values in touched:
         if tuple(values) not in present:
             segs = [

@@ -267,6 +267,19 @@ def test_split_valid_complement(spark):
     }
 
 
+def test_split_valid_unknown_check_is_a_violation(spark):
+    """A rule that evaluates to NULL (in_set over a list holding None)
+    cannot clear the row: it goes to quarantine, never to neither side."""
+    from php_etl_spark.operators.validate import split_valid
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, c string")
+    valid, quarantine = split_valid(
+        df, [{"type": "in_set", "column": "c", "values": ["a", None]}]
+    )
+    assert [r["id"] for r in valid.collect()] == [1]
+    assert [r["id"] for r in quarantine.collect()] == [2]
+
+
 def test_asof_join_directions(spark):
     """forward finds the earliest quote at-or-after the trade; nearest
     picks the closer side with backward winning ties."""

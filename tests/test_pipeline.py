@@ -632,3 +632,229 @@ def test_cli_explain_dry_run(spark, tmp_path, capsys):
     assert "nation -> nation_out" in printed
     assert "FileScan" in printed and "PushedFilters" in printed
     assert not (out_dir / "nation_out").exists(), "dry run must not write"
+
+
+# ---------------------------------------------------------------------------
+# one evaluation per table: the pinned frame feeds every write, and its
+# counts come from the pinning action, in every materialize mode
+
+
+@pytest.fixture(params=["local", "persist", "checkpoint"])
+def materialize_mode(request, spark, tmp_path):
+    from php_etl_spark.materialize import CONF_KEY
+
+    prev = spark.conf.get(CONF_KEY, None)
+    spark.conf.set(CONF_KEY, request.param)
+    if request.param == "checkpoint":
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "ck"))
+    yield request.param
+    if prev is None:
+        spark.conf.unset(CONF_KEY)
+    else:
+        spark.conf.set(CONF_KEY, prev)
+
+
+def _constrained_spec(src, dst, **extra):
+    """ids 1,2 pass the range rule; ids 3,4 (amount 30, 40) violate it."""
+    table = {
+        "columns": {"person_id": "[id]", "full_name": "[name]", "amount": "[amount]"},
+        "unique": ["person_id"],
+        "constraints": [{"type": "range", "column": "amount", "max": 25.0}],
+    }
+    return _spec(src, dst, **{**table, **extra})
+
+
+def _ids(spark, path):
+    return sorted(r.person_id for r in spark.read.parquet(path).collect())
+
+
+def test_constrained_append_rerun_quarantines_once(
+    spark, src_dir, tmp_path, materialize_mode, monkeypatch
+):
+    """Running one spec three times leaves the destination AND the
+    quarantine unchanged after the first run: a violator whose key is
+    already quarantined is skipped like a valid row whose key is
+    already in the destination. The counts reach the metrics JSONL."""
+    from php_etl_spark import observability as O
+
+    metrics = str(tmp_path / "metrics.jsonl")
+    monkeypatch.setenv(O.ENV_KEY, metrics)
+    dst = str(tmp_path / "dst")
+    spec = _constrained_spec(src_dir, dst)
+    counts = []
+    for _ in range(3):
+        (res,) = run_pipeline(spark, spec)
+        counts.append(
+            (
+                res.rows_written,
+                res.rows_quarantined,
+                _ids(spark, os.path.join(dst, "persons")),
+                _ids(spark, os.path.join(dst, "persons_quarantine")),
+            )
+        )
+    assert counts[0] == (2, 2, [1, 2], [3, 4])
+    assert counts[1] == counts[2] == (0, 0, [1, 2], [3, 4])
+    done = [r for r in O.read_metrics(metrics) if r["event"] == "table_done"]
+    assert [(r["rows_written"], r["rows_quarantined"]) for r in done] == [
+        (2, 2),
+        (0, 0),
+        (0, 0),
+    ]
+
+
+def test_quarantine_without_unique_keys_appends(spark, src_dir, tmp_path):
+    """Without unique keys there is no key to recognise a row by, so
+    every run appends its violators again (documented behaviour)."""
+    dst = str(tmp_path / "dst")
+    spec = _constrained_spec(src_dir, dst, unique=[])
+    for n in (2, 4):
+        (res,) = run_pipeline(spark, spec)
+        assert res.rows_quarantined == 2
+        assert len(_ids(spark, os.path.join(dst, "persons_quarantine"))) == n
+
+
+def test_on_violation_fail_writes_nothing(
+    spark, src_dir, tmp_path, materialize_mode
+):
+    dst = str(tmp_path / "dst")
+    with pytest.raises(ValueError, match="2 constraint violations"):
+        run_pipeline(spark, _constrained_spec(src_dir, dst, on_violation="fail"))
+    assert not os.path.exists(dst)
+
+
+_ORDERS_TABLE = {
+    "flow": "orders -> orders_out",
+    "columns": {"k": "[k]", "part": "[part]", "v": "[v]"},
+    "unique": ["k"],
+    "order_by": ["k"],
+    "mode": "upsert",
+    "partition_by": ["part"],
+    "constraints": [{"type": "not_null", "column": "v"}],
+}
+
+
+def _orders_spec(src, dst):
+    return PipelineSpec.from_dict(
+        {
+            "connections": {
+                "from": {"type": "parquet", "path": src},
+                "to": {"type": "parquet", "path": dst},
+            },
+            "tables": [_ORDERS_TABLE],
+        }
+    )
+
+
+def test_partitioned_upsert_pipeline(spark, tmp_path, materialize_mode):
+    """Upsert mode through the runner: untouched partitions keep their
+    bytes, a key that moves partition leaves its old one (emptying it),
+    and a violator is quarantined once across re-runs."""
+    schema = "k int, part string, v int"
+    src1, src2 = str(tmp_path / "s1"), str(tmp_path / "s2")
+    spark.createDataFrame(
+        [(1, "a", 10), (2, "b", 20), (3, "c", 30), (4, "b", None)], schema
+    ).coalesce(1).write.parquet(os.path.join(src1, "orders"))
+    spark.createDataFrame(
+        [(1, "b", 11), (2, "b", 21), (5, "b", 50), (4, "b", None)], schema
+    ).coalesce(1).write.parquet(os.path.join(src2, "orders"))
+    dst = str(tmp_path / "dst")
+    (first,) = run_pipeline(spark, _orders_spec(src1, dst))
+    assert (first.rows_written, first.rows_quarantined) == (3, 1)
+    root = os.path.join(dst, "orders_out")
+    before = _file_digests(root)
+    (second,) = run_pipeline(spark, _orders_spec(src2, dst))
+    assert (second.rows_written, second.rows_quarantined) == (3, 0)
+    after = _file_digests(root)
+    assert {p: h for p, h in before.items() if "part=c" in p} == {
+        p: h for p, h in after.items() if "part=c" in p
+    }
+    assert not os.path.exists(os.path.join(root, "part=a"))
+    rows = sorted(
+        (r["k"], r["part"], r["v"]) for r in spark.read.parquet(root).collect()
+    )
+    assert rows == [(1, "b", 11), (2, "b", 21), (3, "c", 30), (5, "b", 50)]
+    q = spark.read.parquet(root + "_quarantine").collect()
+    assert [(r["k"], r["v"]) for r in q] == [(4, None)]
+
+
+def test_partition_scoped_delete_reinsert_modes(spark, tmp_path, materialize_mode):
+    conn = {"type": "parquet", "path": str(tmp_path)}
+    seed = spark.createDataFrame(
+        [(1, "a", "old"), (1, "a", "old2"), (2, "b", "keep"), (3, "c", "x")],
+        ["k", "part", "tag"],
+    )
+    delete_reinsert(spark, seed, conn, "t", keys=["k"], partition_by=["part"])
+    repl = spark.createDataFrame([(1, "b", "new")], ["k", "part", "tag"])
+    before = _file_digests(str(tmp_path / "t"))
+    delete_reinsert(spark, repl, conn, "t", keys=["k"], partition_by=["part"])
+    after = _file_digests(str(tmp_path / "t"))
+    assert {p: h for p, h in before.items() if "part=c" in p} == {
+        p: h for p, h in after.items() if "part=c" in p
+    }
+    assert not os.path.exists(str(tmp_path / "t" / "part=a"))
+    rows = sorted(
+        (r["k"], r["part"], r["tag"])
+        for r in spark.read.parquet(str(tmp_path / "t")).collect()
+    )
+    assert rows == [(1, "b", "new"), (2, "b", "keep"), (3, "c", "x")]
+
+
+# Spark jobs each step of the ledger spec may launch with local
+# materialization: per table, the schema probe of every parquet input,
+# the adaptive stages of the one pinning evaluation, and one job per
+# write; the upsert adds one touched-partition aggregate and the merged
+# frame's pin. An extra count()/isEmpty()/collect() over a table's
+# frame pushes a step over its ceiling.
+JOB_CEILING = {"load": 9, "rerun": 19}
+
+
+@pytest.mark.parametrize("materialize_mode", ["local"], indirect=True)
+def test_pipeline_jobs_ledger(spark, tmp_path, materialize_mode):
+    """A constrained append plus a partitioned upsert, loaded and then
+    re-run with a delta, launch no more Spark jobs than pinned."""
+    sc = spark.sparkContext
+    people = [(i, f"p{i}", float(i * 10)) for i in range(1, 9)]
+    orders = [(i, f"y{i % 3}", i * 100) for i in range(1, 13)]
+    delta = {
+        "people": [(20, "p20", 5.0), (21, "p21", 99.0)],
+        "orders": [(13, "y1", 1), (40, "y1", 4000)],
+    }
+    srcs = {}
+    for step, extra in (("load", {"people": [], "orders": []}), ("rerun", delta)):
+        srcs[step] = str(tmp_path / step)
+        spark.createDataFrame(
+            people + extra["people"], "id int, name string, amount double"
+        ).coalesce(1).write.parquet(os.path.join(srcs[step], "people"))
+        spark.createDataFrame(
+            orders + extra["orders"], "k int, part string, v int"
+        ).coalesce(1).write.parquet(os.path.join(srcs[step], "orders"))
+    dst = str(tmp_path / "dst")
+    people_table = {
+        "flow": "people -> persons",
+        "columns": {"person_id": "[id]", "amount": "[amount]"},
+        "unique": ["person_id"],
+        "order_by": ["id"],
+        "constraints": [{"type": "range", "column": "amount", "max": 60.0}],
+    }
+    # (rows written, rows quarantined) per table
+    expect = {"load": [(6, 2), (12, 0)], "rerun": [(1, 1), (14, 0)]}
+    jobs = {}
+    for step in ("load", "rerun"):
+        spec = PipelineSpec.from_dict(
+            {
+                "connections": {
+                    "from": {"type": "parquet", "path": srcs[step]},
+                    "to": {"type": "parquet", "path": dst},
+                },
+                "tables": [people_table, _ORDERS_TABLE],
+            }
+        )
+        group = f"ledger-{step}-{id(tmp_path)}"
+        sc.setJobGroup(group, group)
+        try:
+            results = run_pipeline(spark, spec)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[step] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert [(r.rows_written, r.rows_quarantined) for r in results] == expect[step]
+    assert all(jobs[s] <= JOB_CEILING[s] for s in jobs), (jobs, JOB_CEILING)
