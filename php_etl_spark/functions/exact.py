@@ -43,22 +43,35 @@ def davg(col: Column | str, scale: str = MONEY) -> Column:
     return F.sum(dec(c, scale)).cast("double") / F.count(c)
 
 
-def round_milli(x):
-    """Half-AWAY-FROM-ZERO rounding of ``x * 1000`` for Python-side
-    (pandas/numpy) operators — the same tie rule Spark's ``round`` and
-    DuckDB's ``round`` apply, which ``np.round`` does NOT (banker's).
-    Load-bearing for oracle parity in every exact-stateful operator
-    (EWMA, Holt, streaming EWMA); keep ONE definition so no copy ever
-    drifts back to ``np.round``. Accepts a numpy array (returns int64
-    array) or a float scalar (returns int)."""
+def round_half_away(a):
+    """Round doubles to integers, ties AWAY FROM ZERO — Spark's
+    ``round(x)`` on a double, which ``np.round`` (banker's) is not.
+    Returns integer-valued float64 (array or scalar); NaN/±inf pass
+    through. Exact for every double: ``m − floor(m)`` is computed
+    without rounding, so the tie test sees the true fraction, whereas
+    ``floor(m + 0.5)`` rounds the sum first (0.49999999999999994 → 1,
+    2^52+1 → 2^52+2)."""
     import numpy as np
 
-    p = x * 1000.0
-    if isinstance(p, np.ndarray):
-        return (np.sign(p) * np.floor(np.abs(p) + 0.5)).astype("int64")
-    import math
+    m = np.abs(a)
+    r = np.floor(m)
+    r = r + ((m - r) >= 0.5)
+    return np.copysign(r, a)
 
-    return int(math.copysign(math.floor(abs(p) + 0.5), p))
+
+def round_milli(x):
+    """Half-away-from-zero rounding of ``x * 1000`` for Python-side
+    (pandas/numpy) operators — the same tie rule Spark's ``round`` and
+    DuckDB's ``round`` apply. Load-bearing for oracle parity in every
+    exact-stateful operator (EWMA, Holt, streaming EWMA). Accepts a
+    numpy array (returns int64 array) or a float scalar (returns
+    int)."""
+    import numpy as np
+
+    r = round_half_away(x * 1000.0)
+    if isinstance(r, np.ndarray):
+        return r.astype("int64")
+    return int(r)
 
 
 # ---------------------------------------------------------------------------

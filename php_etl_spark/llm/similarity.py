@@ -1,22 +1,25 @@
 """Embedding similarity search over ``array<float>`` columns.
 
-Cosine arithmetic runs in exact decimals: float×float products are
-exactly representable in double, each product rounds once to
-decimal(30,15), and decimal sums are associative — so a dot product
-is bit-identical under any partitioning/order and across engines
-(the reproducibility you want when a 1000-executor job re-shuffles).
+Vectors quantize to integers (``quantize``: x·1e6 rounded half away
+from zero), so every dot product, norm and hyperplane projection is
+exact int64 arithmetic. Integer sums are associative: a score is
+bit-identical under any partitioning, reduction order or engine, which
+is what lets these searches carry exact SQL oracles.
 
 Search paths:
 - brute-force top-k: broadcast the query set, one linear scan of the
   candidate side, per-query heap via window row_number. O(N·Q·d) —
   the exact baseline.
-- random-hyperplane LSH: deterministic hash-derived planes bucket
-  vectors by sign pattern; probing only same-bucket candidates makes
-  the scan sublinear. Approximate → verified by recall tests, not an
-  SQL oracle.
+- random-hyperplane LSH: md5-derived integer hyperplanes bucket
+  vectors by the sign pattern of their projections, all tables in one
+  Arrow-batched int64 matmul (``lsh_buckets``); probing only
+  same-bucket candidates makes the scan sublinear. Approximate against
+  brute force (recall tests), exact against its own SQL oracle.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -149,15 +152,14 @@ def hyperplane_coefficients(
     the bucket assignment is bit-reproducible in plain SQL (this is
     what gives sim_ann_lsh its exact cross-engine oracle). Integer
     coefficients ~uniform in [-1000, 1000]: the projection of a
-    quantized vector is then exact BIGINT arithmetic — sign decisions
+    quantized vector is then exact integer arithmetic — sign decisions
     cannot flip with partitioning, reduction order, or engine.
 
-    Returns nested Python lists ``[tbl][plane] -> dim ints`` — this is
-    *configuration*, a few KiB regardless of data size, computed
-    driver-side with hashlib (no Spark job) and shipped as ONE
-    broadcast row (the fold in ``lsh_buckets`` then needs no
-    coefficient join at all). ``spark`` is accepted for signature
-    compatibility and unused."""
+    Returns nested Python lists ``[tbl][plane] -> dim ints`` — a few
+    KiB of configuration regardless of data size, computed with
+    hashlib (no Spark job). ``lsh_buckets`` captures it as an int64
+    matrix in its kernel's closure. ``spark`` is accepted for
+    signature compatibility and unused."""
     import hashlib as _hashlib
 
     def coef(t: int, p: int, i: int) -> int:
@@ -170,59 +172,143 @@ def hyperplane_coefficients(
     ]
 
 
+def _plane_matrix(coefs):
+    """``[tbl][plane][i]`` coefficients as the (dim × tables·planes)
+    int64 matrix the bucket kernel multiplies by: column
+    ``t·planes + p`` is plane p of table t."""
+    import numpy as np
+
+    cf = np.asarray(coefs, dtype=np.int64)
+    n_tables, n_planes, dim = cf.shape
+    return np.ascontiguousarray(cf.reshape(n_tables * n_planes, dim).T)
+
+
+@functools.lru_cache(maxsize=None)
+def _md5_planes(n_tables: int, n_planes: int, dim: int):
+    """The md5 hyperplanes for vectors of length ``dim``, memoized per
+    process — a Python worker derives each length's planes once."""
+    return _plane_matrix(hyperplane_coefficients(None, n_tables, n_planes, dim))
+
+
 def lsh_buckets(
     emb: DataFrame,
     coefs: list[list[list[int]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(vector, table) → sign-pattern bucket id, fully NARROW: the
-    coefficient tensor rides along as ONE broadcast row (a
-    BroadcastNestedLoopJoin against a 1-row frame — no shuffle), each
-    projection is a ``zip_with``+``aggregate`` fold of the QUANTIZED
-    vector against an integer coefficient slice (exact BIGINT — the
-    sign of the projection is engine/order-independent), signs pack
-    per table via an indexed ``transform``, and one explode emits a
-    row per (vector, table).
+    """(vector, table) → sign-pattern bucket id: one row per vector
+    and table, ``(vid, tbl, bucket)`` with bit p of ``bucket`` set iff
+    ``q(vec) · coefs[tbl][p] > 0``, where ``q`` is ``quantize`` (round
+    half away from zero of x·1e6, to int64).
 
-    The previous shape posexploded N×dim rows and shuffled them twice
-    — dim× the corpus through the exchange for what is a per-row
-    computation. Keeping the coefficients in a column (not as literal
-    expression nodes) also keeps the plan tree small: 8×4×64 values as
-    literals made Catalyst spend seconds folding constants."""
-    spark = emb.sparkSession
-    one = spark.createDataFrame(
-        [(coefs,)], "cf: array<array<array<long>>>"
+    One narrow ``mapInArrow`` kernel, no shuffle and no join: per Arrow
+    batch it quantizes the vectors, multiplies them by the (dim ×
+    tables·planes) int64 coefficient matrix held in its closure, and
+    packs the sign bits per table. The projection is EXACT: integer
+    addition is associative, so the sign cannot depend on summation
+    order, partitioning or engine — the same buckets the oracle's SQL
+    computes. Overflow never wraps: a non-finite component, or one that
+    does not quantize into int64, raises (as Spark's ANSI cast does),
+    and so does a hashed vector with |q| > (2^63−1) // (max|c|·dim),
+    the bound under which no product or partial sum can leave int64.
+
+    A NULL vector, a vector with a NULL component, or one whose length
+    is not ``dim`` gets bucket 0 in every table. A NULL id passes
+    through."""
+    mat = _plane_matrix(coefs)
+    dim = mat.shape[0]
+    return _sign_buckets(
+        emb,
+        len(coefs),
+        len(coefs[0]),
+        lambda n: mat if n == dim else None,
+        id_col,
+        vec_col,
     )
-    qvec = quantize(F.col(vec_col))
-    # bucket per table t: Σ_p [proj_p > 0] << p, proj_p = q(vec) · cf[t][p]
-    buckets = F.transform(
-        F.col("cf"),
-        lambda tbl_arr, t: F.struct(
-            t.cast("long").alias("tbl"),
-            F.aggregate(
-                F.transform(
-                    tbl_arr,
-                    lambda plane_arr, p: F.when(
-                        F.aggregate(
-                            F.zip_with(qvec, plane_arr, lambda x, c: x * c),
-                            F.lit(0).cast("long"),
-                            lambda acc, x: acc + x,
-                        )
-                        > 0,
-                        F.pow(F.lit(2.0), p).cast("long"),
-                    ).otherwise(F.lit(0).cast("long")),
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("bucket"),
-        ),
+
+
+def _sign_buckets(
+    emb: DataFrame,
+    n_tables: int,
+    n_planes: int,
+    planes,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The ``lsh_buckets`` kernel. ``planes(n)`` gives the coefficient
+    matrix for vectors of length n, or None to leave them in bucket 0;
+    it is called on the Python worker, once per length per batch."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from php_etl_spark.functions.exact import round_half_away
+
+    schema = StructType(
+        [
+            StructField("vid", emb.schema[id_col].dataType),
+            StructField("tbl", LongType()),
+            StructField("bucket", LongType()),
+        ]
     )
-    return (
-        emb.join(F.broadcast(one))
-        .select(F.col(id_col).alias("vid"), F.explode(buckets).alias("tb"))
-        .select("vid", F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
-    )
+    int64_max = (1 << 63) - 1
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        tbl_ids = np.arange(n_tables, dtype=np.int64)
+        bit = np.int64(1) << np.arange(n_planes, dtype=np.int64)
+        for b in batches:
+            n = b.num_rows
+            vecs = b.column(1)
+            # a NULL vector has length -1 and no values in ``flat``
+            lens = pc.fill_null(pc.list_value_length(vecs), -1).to_numpy()
+            sizes = np.maximum(lens, 0)
+            starts = np.zeros(n, dtype=np.int64)
+            np.cumsum(sizes[:-1], out=starts[1:])
+            flat = pc.list_flatten(vecs)
+            nulls = np.concatenate(
+                ([0], np.cumsum(flat.is_null().to_numpy(zero_copy_only=False)))
+            )
+            # hashable: a non-NULL vector without NULL components
+            whole = (lens >= 0) & (nulls[starts + sizes] == nulls[starts])
+            q = round_half_away(
+                pc.fill_null(flat, 0).to_numpy().astype(np.float64) * QUANT
+            )
+            if not (np.abs(q) < 2.0**63).all():
+                raise ArithmeticError(
+                    "lsh_buckets: embedding component is NaN, infinite, or "
+                    "quantizes outside int64"
+                )
+            bucket = np.zeros((n, n_tables), dtype=np.int64)
+            for dim in np.unique(lens[whole]):
+                mat = planes(int(dim))
+                if mat is None:
+                    continue
+                rows = np.flatnonzero(whole & (lens == dim))
+                qv = q[starts[rows, None] + np.arange(dim)]
+                limit = int64_max // max(1, int(np.abs(mat).max(initial=0)) * int(dim))
+                if np.abs(qv).max(initial=0) > limit:
+                    raise ArithmeticError(
+                        f"lsh_buckets: quantized component exceeds {limit}; "
+                        "the int64 projection could overflow"
+                    )
+                signs = (qv.astype(np.int64) @ mat > 0).reshape(
+                    len(rows), n_tables, n_planes
+                )
+                bucket[rows] = signs @ bit
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column(0).take(pa.array(np.repeat(np.arange(n), n_tables))),
+                    pa.array(np.tile(tbl_ids, n)),
+                    pa.array(bucket.ravel()),
+                ],
+                names=["vid", "tbl", "bucket"],
+            )
+
+    return emb.select(
+        F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")
+    ).mapInArrow(kernel, schema)
 
 
 def ann_topk_lsh(
@@ -244,19 +330,24 @@ def ann_topk_lsh(
     assignment and the rescore exact cross-engine arithmetic, so the
     whole query carries a bit-exact SQL oracle (sim_ann_lsh).
 
-    Pass ``dim`` (the embedding dimensionality — schema knowledge the
-    caller has) to keep the plan fully lazy; omitting it probes one
-    row driver-side."""
-    spark = emb.sparkSession
+    ``dim`` fixes the embedding length: vectors of any other length
+    land in bucket 0. With ``dim=None`` every vector is hashed with the
+    planes for its own length, derived on the worker — building the
+    frame launches no job either way."""
     if dim is None:
-        dim = len(emb.select(vec_col).first()[0])
-    coefs = hyperplane_coefficients(spark, n_tables, n_planes, dim)
-    cb = lsh_buckets(emb, coefs, id_col, vec_col).withColumnRenamed(
-        "vid", "neighbor_id"
-    )
-    qb = lsh_buckets(queries, coefs, id_col, vec_col).withColumnRenamed(
-        "vid", "query_id"
-    )
+        planes = functools.partial(_md5_planes, n_tables, n_planes)
+
+        def buckets(df):
+            return _sign_buckets(df, n_tables, n_planes, planes, id_col, vec_col)
+
+    else:
+        coefs = hyperplane_coefficients(None, n_tables, n_planes, dim)
+
+        def buckets(df):
+            return lsh_buckets(df, coefs, id_col, vec_col)
+
+    cb = buckets(emb).withColumnRenamed("vid", "neighbor_id")
+    qb = buckets(queries).withColumnRenamed("vid", "query_id")
     cand = (
         cb.join(F.broadcast(qb), ["tbl", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))

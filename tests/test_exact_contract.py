@@ -18,6 +18,8 @@ from php_etl_spark.functions.exact import (
     cents,
     dsum,
     fixed_point_violations,
+    round_half_away,
+    round_milli,
     sum_scaled,
 )
 
@@ -65,3 +67,48 @@ def test_sum_scaled_matches_decimal_path_on_real_data(catalog):
         | (F.col("fast_rate") != F.col("exact_rate"))
     ).count()
     assert bad == 0
+
+
+# doubles where floor(|x| + 0.5) and Spark's round disagree, and ties
+ROUNDING_EDGES = [
+    0.49999999999999994,
+    -0.49999999999999994,
+    float(2**52 + 1),
+    -float(2**52 + 1),
+    2.5,
+    -2.5,
+    0.5,
+    -0.5,
+    1.5,
+    7812.5,
+    0.0,
+    4503599627370.497,  # x·1000 = 2^52+1
+    -4503599627370.497,
+]
+
+
+def test_round_half_away_matches_spark_round(spark):
+    """The one Python-side rounding helper agrees with Spark's
+    ``round`` on every edge double, and ``round_milli`` inherits it."""
+    import numpy as np
+
+    df = spark.createDataFrame([(x,) for x in ROUNDING_EDGES], "x double")
+    got = {
+        r.x: (r.r, r.m)
+        for r in df.select(
+            "x",
+            F.round("x").alias("r"),
+            F.round(F.col("x") * 1000.0).cast("long").alias("m"),
+        ).collect()
+    }
+    arr = round_half_away(np.array(ROUNDING_EDGES))
+    milli = round_milli(np.array(ROUNDING_EDGES))
+    for i, x in enumerate(ROUNDING_EDGES):
+        assert arr[i] == got[x][0], x
+        assert round_half_away(x) == got[x][0], x
+        assert milli[i] == got[x][1] and round_milli(x) == got[x][1], x
+    assert round_half_away(0.49999999999999994) == 0.0
+    assert round_half_away(float(2**52 + 1)) == float(2**52 + 1)
+    assert list(round_half_away(np.array([2.5, -2.5, 0.5, -0.5]))) == [
+        3.0, -3.0, 1.0, -1.0,
+    ]

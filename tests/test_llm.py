@@ -4,6 +4,7 @@ counterparts — since they have no SQL oracle."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from php_etl_spark.catalog import Catalog
@@ -103,6 +104,160 @@ def test_ann_lsh_recall(spark):
     # multi-table OR-amplification: most true neighbors should land in
     # at least one matching bucket, but recall < 1 by construction
     assert len(approx & exact) / len(exact) >= 0.5
+
+
+def _lsh_reference(rows, coefs):
+    """Pure-Python big-int ``lsh_buckets``: each component quantizes as
+    Spark's ``round`` does (half away from zero on the decimal form of
+    x·1e6), projections are exact Python ints. A NULL vector, a NULL
+    component or a length other than ``dim`` gives bucket 0."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    dim = len(coefs[0][0])
+    out = []
+    for vid, vec in rows:
+        ok = vec is not None and len(vec) == dim and None not in vec
+        q = (
+            [
+                int(Decimal(repr(x * 1e6)).quantize(Decimal(1), ROUND_HALF_UP))
+                for x in vec
+            ]
+            if ok
+            else None
+        )
+        for t, planes in enumerate(coefs):
+            bucket = 0
+            for p, plane in enumerate(planes if ok else []):
+                if sum(a * c for a, c in zip(q, plane)) > 0:
+                    bucket |= 1 << p
+            out.append((vid, t, bucket))
+    return out
+
+
+def _tie_sensitive(plane, sign, dim):
+    """A vector with one exact tie component, x·1e6 = ±7812.5, whose
+    projection on ``plane`` has the other sign if that tie rounds to
+    ±7812 instead of away from zero: a second component balances the
+    projection into (0, d] or (d, 0], d being the change the tie's
+    rounding makes."""
+    order = sorted(range(dim), key=lambda k: -abs(plane[k]))
+    i, j = order[0], order[1]
+    d = sign * plane[i]
+    base = sign * 7813 * plane[i]
+    lo, hi = sorted((0, d))
+    r = round(-base / plane[j])
+    q_j = next(
+        q for q in range(r - 3, r + 4) if lo < q * plane[j] + base <= hi
+    )
+    vec = [0.0] * dim
+    vec[i] = sign * 2.0**-7
+    vec[j] = q_j / 1e6
+    return vec
+
+
+def _none_first(row):
+    return tuple((v is not None, v) for v in row)
+
+
+def test_lsh_buckets_match_big_int_reference(spark):
+    """The bucket contract, pinned against an independent reference on
+    random vectors plus every edge row, with the input split across
+    partitions and small Arrow batches."""
+    import random
+
+    rnd = random.Random(3)
+    dim = 16
+    tie = 2.0**-7  # x·1e6 = 7812.5 exactly
+    rows = [(i, [rnd.gauss(0, 1) for _ in range(dim)]) for i in range(300)]
+    rows += [
+        (1000, None),
+        (1001, [0.25] * (dim - 1) + [None]),
+        (1002, [0.25] * (dim - 1)),
+        (1003, [0.25] * (dim + 1)),
+        (1004, [0.0] * dim),
+        (1005, [tie, -tie, 3 * tie, -3 * tie] * (dim // 4)),
+        (1006, [tie] * dim),
+        (None, [rnd.gauss(0, 1) for _ in range(dim)]),
+    ]
+    coefs = S.hyperplane_coefficients(spark, 3, 5, dim)
+    rows += [
+        (1100 + 10 * t + 2 * p + (sign < 0), _tie_sensitive(coefs[t][p], sign, dim))
+        for t in range(3)
+        for p in range(5)
+        for sign in (1, -1)
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    ).repartition(3)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = [tuple(r) for r in S.lsh_buckets(emb, coefs).collect()]
+    finally:
+        spark.conf.set(key, prev)
+    # the reference reads the vectors back, i.e. already as float32
+    want = _lsh_reference([tuple(r) for r in emb.collect()], coefs)
+    assert sorted(got, key=_none_first) == sorted(want, key=_none_first)
+    by_vid = {}
+    for vid, t, b in got:
+        by_vid.setdefault(vid, []).append(b)
+    for vid in (1000, 1001, 1002, 1003, 1004):
+        assert by_vid[vid] == [0, 0, 0], vid
+    assert len(by_vid[None]) == 3
+
+
+@pytest.mark.parametrize("bad", [1e12, 3e38, float("nan"), float("inf")])
+def test_lsh_buckets_raise_instead_of_wrapping(spark, bad):
+    """A component whose quantized projection could leave int64, or
+    that is not finite, fails the query; it never wraps."""
+    emb = spark.createDataFrame(
+        [(1, [bad] + [0.1] * 63)], "vec_id long, embedding array<float>"
+    )
+    coefs = S.hyperplane_coefficients(spark, 8, 4, 64)
+    with pytest.raises(Exception, match="lsh_buckets"):
+        S.lsh_buckets(emb, coefs).collect()
+
+
+# Jobs one execution of sim_ann_lsh may launch: the candidate side's
+# stages, the broadcast query side and the rescore. Coefficients built
+# as a driver-side DataFrame would add a Python-RDD scan and two jobs.
+ANN_LSH_JOB_CEILING = 6
+
+
+def test_sim_ann_lsh_jobs_ledger_and_plan(spark):
+    from php_etl_spark.queries import QUERIES
+
+    sc = spark.sparkContext
+    df = QUERIES["sim_ann_lsh"](spark, SF)
+    group = f"ann-lsh-ledger-{id(df)}"
+    sc.setJobGroup(group, group)
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= ANN_LSH_JOB_CEILING, jobs
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "applySchemaToPythonRDD" not in plan
+    assert "MapInArrow" in plan
+
+
+def test_ann_lsh_dim_none_builds_without_jobs(spark):
+    """``dim=None`` derives each length's planes on the worker: building
+    the frame launches no job, and the answer equals ``dim=64``."""
+    emb = Catalog(spark, SF).embeddings
+    queries = emb.filter(F.col("vec_id") < 10)
+    sc = spark.sparkContext
+    group = f"ann-lsh-dim-none-{id(emb)}"
+    sc.setJobGroup(group, group)
+    try:
+        lazy = S.ann_topk_lsh(emb, queries, n_planes=4, n_tables=8, k=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    fixed = S.ann_topk_lsh(emb, queries, n_planes=4, n_tables=8, k=5, dim=64)
+    assert sorted(lazy.collect()) == sorted(fixed.collect())
 
 
 def test_cosine_quantized_accuracy(spark):

@@ -423,11 +423,13 @@ AUDITS = {
          lambda p: "SortMergeJoin" in p or "ShuffledHashJoin" in p),
     ],
     "lsh_buckets_narrow": [
-        ("bucketing is narrow: only the 1-row coefficient broadcast, "
-         "no data shuffle",
+        ("bucketing is narrow: no data shuffle",
          lambda p: "Exchange hashpartitioning" not in p),
-        ("coefficients ride a broadcast join",
-         lambda p: "BroadcastNestedLoopJoin" in p),
+        ("one Arrow kernel computes every table's sign bits",
+         lambda p: p.count("MapInArrow") == 1),
+        ("no Python-RDD scan (coefficients live in the kernel closure)",
+         lambda p: "ExistingRDD" not in p
+         and "applySchemaToPythonRDD" not in p),
     ],
     "event_transitions": [
         ("one shuffle total: window and count share the user_id "
