@@ -8,7 +8,9 @@ SURVEY.md §2 with its DuckDB oracle. Implementation lives in
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -36,7 +38,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return run
 
-    return {name: _wrap(fn) for name, fn in Q.QUERIES.items()}
+    return {name: _wrap(Q.QUERIES[name]) for name in _driver_order(Q.QUERIES)}
+
+
+def _driver_order(names, root: str = _REPO) -> list[str]:
+    """``names`` in the driver's verification order, from each key's
+    latest row across the ``CORRECTNESS_r<round>.json`` ledgers in
+    ``root``: keys whose latest row is red first, then the rest by the
+    round of that row, oldest first (a never-checked key is round 0).
+    Ties keep ``names`` order. A ledger that does not parse raises."""
+    rounds = {}
+    for fname in os.listdir(root):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if m:
+            rounds[int(m.group(1))] = os.path.join(root, fname)
+    latest = {}
+    for rnd in sorted(rounds):
+        with open(rounds[rnd]) as f:
+            for key, row in json.load(f).items():
+                green = row.get("hash_match") is True or (
+                    row.get("err") == "no_oracle"
+                    and row.get("spark_rows") is not None
+                )
+                latest[key] = (green, rnd)
+    return sorted(names, key=lambda k: latest.get(k, (True, 0)))
 
 
 def oracle_sql() -> dict[str, str]:

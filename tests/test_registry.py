@@ -106,249 +106,116 @@ def test_lint_detects_known_hugeint():
     ) == [("island", "HUGEINT")]
 
 
-def test_rotation_priority_list_is_clean():
-    """Every rotation-priority key must exist in the registry and
-    appear exactly once — a typo or duplicate silently burns a slot
-    of the driver's 50-key correctness window."""
-    from php_etl_spark.queries import DRIVER_GREEN, QUERIES, _PRIORITY
-
-    assert len(_PRIORITY) == len(set(_PRIORITY)), sorted(
-        k for k in set(_PRIORITY) if _PRIORITY.count(k) > 1
-    )
-    missing = [k for k in _PRIORITY if k not in QUERIES]
-    assert not missing, missing
-    missing_green = [k for k in DRIVER_GREEN if k not in QUERIES]
-    assert not missing_green, missing_green
-
-
-def test_driver_history_latest_row_wins(tmp_path):
-    """A key whose NEWEST driver row is red must not count as green
-    (it re-enters the window next round), and rows-only rows must
-    report the round of their most recent clean run."""
+def _write_ledgers(root, ledgers):
     import json
 
-    from php_etl_spark.queries import _driver_history_from_files
-
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps(
-            {
-                "a": {"hash_match": True},
-                "b": {"hash_match": True},
-                "c": {"err": "no_oracle", "spark_rows": 5},
-            }
-        )
-    )
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps(
-            {
-                "b": {"hash_match": False},  # regression: latest row is red
-                "c": {"err": "no_oracle", "spark_rows": 5},
-                "d": {"err": "boom", "spark_rows": None},
-            }
-        )
-    )
-    hash_green, rows_only_last, red_keys, n_rounds = _driver_history_from_files(
-        root=str(tmp_path)
-    )
-    assert n_rounds == 2
-    assert hash_green == ["a"]  # b's newer red row demotes it
-    assert rows_only_last == {"c": 2}
-    # b (newest row red) and d (errored) are both flagged for fronting
-    assert red_keys == ["b", "d"]
+    for name, rows in ledgers.items():
+        (root / name).write_text(json.dumps(rows))
 
 
-def test_red_keys_front_of_window(monkeypatch, tmp_path):
-    """A key the driver flags red in ANY round must take the very front
-    of the next window — ahead of _PRIORITY — not re-enter in
-    registration order (judge ADVICE r6 #1)."""
+def test_driver_order_rule(tmp_path):
+    """The driver verifies ``__spark_entry__.queries()`` in windows of
+    50 keys. Order: keys whose LATEST ledger row is red first, then the
+    rest by the round of their latest row, oldest first (never checked
+    = round 0); ties keep registration order. The round is the number
+    in the ledger's file name."""
+    from __spark_entry__ import _driver_order
+
+    green = {"hash_match": True}
+    rows_only = {"err": "no_oracle", "spark_rows": 5}
+    red = {"hash_match": False}
+    _write_ledgers(
+        tmp_path,
+        {
+            "CORRECTNESS_r01.json": {
+                "a_green": green,
+                "b_demoted": green,
+                "c_rows_only": rows_only,
+                "e_retired": red,
+                "h_green": green,
+                "i_no_rows": {"err": "no_oracle", "spark_rows": None},
+            },
+            "CORRECTNESS_r02.json": {
+                "b_demoted": red,  # a newer red row demotes an older green
+                "c_rows_only": rows_only,
+                "d_errored": {"err": "boom", "spark_rows": None},
+                "e_retired": green,  # a newer green row retires an older red
+            },
+            # as text _r10 sorts before _r9, which would make g's red
+            # round-9 row its latest
+            "CORRECTNESS_r9.json": {"f_r9": green, "g_flip": red},
+            "CORRECTNESS_r10.json": {"g_flip": green, "unregistered": red},
+        },
+    )
+    names = [
+        "z_never", "a_green", "b_demoted", "c_rows_only", "d_errored",
+        "e_retired", "f_r9", "g_flip", "h_green", "i_no_rows", "y_never",
+    ]
+    assert _driver_order(names, root=str(tmp_path)) == [
+        "i_no_rows", "b_demoted", "d_errored",  # red, by round
+        "z_never", "y_never",  # never checked: round 0
+        "a_green", "h_green",  # round 1
+        "c_rows_only", "e_retired",  # round 2
+        "f_r9",
+        "g_flip",  # round 10
+    ]
+    # no ledgers (standalone install): registration order
+    (tmp_path / "empty").mkdir()
+    assert _driver_order(names, root=str(tmp_path / "empty")) == names
+
+
+def test_driver_order_unparseable_ledger_raises(tmp_path):
+    """A ledger that does not parse must fail loudly: skipping it would
+    silently drop its red rows from the front of the window."""
     import json
 
-    import php_etl_spark.queries as q
+    from __spark_entry__ import _driver_order
 
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps({"topk": {"hash_match": False}})
+    _write_ledgers(
+        tmp_path, {"CORRECTNESS_r01.json": {"a": {"hash_match": True}}}
     )
-    real = q._driver_history_from_files
-
-    def patched(root=None):
-        return real(root=str(tmp_path))
-
-    monkeypatch.setattr(q, "_driver_history_from_files", patched)
-    order_before = list(q.QUERIES)
-    try:
-        q._reorder_for_driver()
-        assert list(q.QUERIES)[0] == "topk"
-    finally:
-        # restore the real-ledger ordering for the rest of the suite
-        monkeypatch.setattr(q, "_driver_history_from_files", real)
-        q._reorder_for_driver()
-        del order_before
+    (tmp_path / "CORRECTNESS_r02.json").write_text('{"a": {"hash_match": fal')
+    with pytest.raises(json.JSONDecodeError):
+        _driver_order(["a"], root=str(tmp_path))
 
 
-def test_rotation_window_shape():
-    """The driver verifies the first 50 keys in registry order. With the
-    real repo ledgers present, the window head must be: the 10 ex-red
-    recast keys (positions 1-10), then the aged rows-only re-exposures,
-    then never-driver-checked debt in registration order — and no key
-    with a current green driver row may burn a debt slot."""
-    from php_etl_spark.queries import (
-        QUERIES,
-        _PRIORITY,
-        _ROWS_ONLY_REEXPOSE,
-        _driver_history_from_files,
-    )
+def test_driver_order_on_committed_ledgers():
+    """On the repo's ledgers the contract exposes exactly the registry,
+    the engine keeps source order (importing it reads no ledger), and
+    the window order is the red prefix followed by non-decreasing
+    latest-row rounds."""
+    import glob
+    import json
+    import os
+    import re
 
-    hash_green, rows_only_last, red_keys, n_rounds = _driver_history_from_files()
-    if n_rounds == 0:
-        pytest.skip("no driver ledgers present (standalone install)")
-    keys = list(QUERIES)
-    flagged = [k for k in red_keys if k in QUERIES]
-    still_red = flagged + [
-        k
-        for k in _PRIORITY
-        if k not in set(hash_green) and k not in set(flagged)
+    import __spark_entry__ as E
+    from php_etl_spark import queries as Q
+
+    keys = list(E.queries())
+    assert set(keys) == set(Q.QUERIES)
+    assert E.oracle_sql() == Q.ORACLES
+    lines = [fn.__code__.co_firstlineno for fn in Q.QUERIES.values()]
+    assert lines == sorted(lines)
+
+    root = os.path.dirname(os.path.abspath(E.__file__))
+    latest = {}  # key -> (round, red)
+    ledgers = [
+        (int(re.search(r"_r(\d+)\.json$", p).group(1)), p)
+        for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
     ]
-    assert keys[: len(still_red)] == still_red
-    window = set(keys[:50])
-    # rows-only re-exposure cadence: SUSPENDED while never-checked debt
-    # is large (judge r9 #1 — a re-exposed no-oracle key can only return
-    # a verdict-free row; every slot must buy a hash verdict), resuming
-    # at the low-debt cadence once the debt drains (judge r6 #6)
-    from php_etl_spark.queries import (
-        _CHANGED_SINCE_GREEN,
-        _LOW_DEBT_THRESHOLD,
-        _ROWS_ONLY_REEXPOSE_LOW_DEBT,
-        ORACLES,
-    )
-
-    seen = set(hash_green) | set(rows_only_last) | set(red_keys)
-    n_debt = sum(1 for k in QUERIES if k not in seen)
-    # keys the rotation legitimately fronts regardless of debt: reds/
-    # priority (still_red), rows-only keys UPGRADED with an exact oracle
-    # (rule 3), and declared changed-since-green keys — exclude them
-    # from the stale-re-exposure assertions below
-    upgraded = {k for k in rows_only_last if k in ORACLES}
-    allowed_head = set(still_red) | upgraded | set(_CHANGED_SINCE_GREEN)
-    reexposed = [
-        k for k in rows_only_last if k in window and k not in allowed_head
-    ]
-    if n_debt >= _LOW_DEBT_THRESHOLD:
-        assert _ROWS_ONLY_REEXPOSE == 0
-        assert not reexposed, reexposed
-        # and while oracle-backed debt can fill the remaining slots,
-        # every non-head slot must be a never-checked oracle-backed key
-        n_debt_oracle = sum(
-            1 for k in QUERIES if k not in seen and k in ORACLES
-        )
-        if n_debt_oracle >= 50:
-            assert all(
-                (k not in seen and k in ORACLES) or k in allowed_head
-                for k in keys[:50]
-            )
-    else:
-        # low debt: the bounded-staleness cadence resumes at the
-        # LOW-DEBT rate (judge r6 #6) — assert against that constant,
-        # not the suspended high-debt one (which is 0 and vacuous).
-        # The eligible ("stale") set must mirror the ENGINE's
-        # definition (queries.py _reorder_for_driver, judge r12 #1):
-        # no-oracle keys that either have NEVER had a driver row of
-        # any kind (implied last-round 0 — maximally stale) or whose
-        # rows-only row aged at least _ROWS_ONLY_MAX_AGE rounds. The
-        # original accounting counted only the aged rows_only_last
-        # keys, so the first time this branch ran (r12 ledger, debt
-        # 75 < 100) it under-counted re-exposures the engine made
-        # from the never-seen pool and went red.
-        from php_etl_spark.queries import _ROWS_ONLY_MAX_AGE
-
-        current_round = n_rounds + 1
-        stale = [
-            k
-            for k in QUERIES
-            if k not in ORACLES
-            and (
-                k not in seen
-                or (
-                    k in rows_only_last
-                    and current_round - rows_only_last[k]
-                    >= _ROWS_ONLY_MAX_AGE
+    for rnd, path in sorted(ledgers):
+        with open(path) as f:
+            for key, row in json.load(f).items():
+                rows_only = (
+                    row["err"] == "no_oracle" and row["spark_rows"] is not None
                 )
-            )
-        ]
-        # and the re-exposed count must include the never-seen
-        # no-oracle keys occupying window slots (they are stale by
-        # the engine's definition but absent from rows_only_last,
-        # so the shared `reexposed` list above misses them)
-        reexposed_low = [
-            k for k in stale if k in window and k not in allowed_head
-        ]
-        assert len(reexposed_low) >= min(
-            _ROWS_ONLY_REEXPOSE_LOW_DEBT, len(stale)
-        )
-    # nothing currently hash-green may appear inside the window —
-    # except keys whose semantics changed after their green row
-    # (declared in _CHANGED_SINCE_GREEN; they need a fresh driver row)
-    from php_etl_spark.queries import _CHANGED_SINCE_GREEN
-
-    leaked = [
-        k
-        for k in keys[:50]
-        if k in set(hash_green) and k not in set(_CHANGED_SINCE_GREEN)
-    ]
-    assert not leaked, leaked
-
-
-def test_front_never_checked_and_upgrade_deferral():
-    """r12 window rules (judge r11 #1/#3): (a) _FRONT_NEVER_CHECKED
-    keys with no driver row of any kind take the head of the window;
-    (b) a rows-only key upgraded with an exact oracle does NOT front
-    while never-checked debt >= _LOW_DEBT_THRESHOLD — its re-exposure
-    waits for the low-debt crossover so every high-debt slot buys a
-    first hash verdict."""
-    from php_etl_spark.queries import (
-        ORACLES,
-        QUERIES,
-        _FRONT_NEVER_CHECKED,
-        _LOW_DEBT_THRESHOLD,
-        _driver_history_from_files,
-    )
-
-    hash_green, rows_only_last, red_keys, n_rounds = _driver_history_from_files()
-    if n_rounds == 0:
-        pytest.skip("no driver ledgers present (standalone install)")
-    seen = set(hash_green) | set(rows_only_last) | set(red_keys)
-    keys = list(QUERIES)
-    window = keys[:50]
-    for k in _FRONT_NEVER_CHECKED:
-        if k in QUERIES and k not in seen:
-            assert k in window, f"{k} declared front-of-debt but not in window"
-    n_debt = sum(1 for k in QUERIES if k not in seen)
-    upgraded = [k for k in rows_only_last if k in QUERIES and k in ORACLES]
-    if n_debt >= _LOW_DEBT_THRESHOLD:
-        assert not [k for k in upgraded if k in set(window)], (
-            "upgraded rows-only keys must defer to the low-debt "
-            "crossover while never-checked debt is large"
-        )
-    else:
-        # low debt: upgraded keys front for their first hash verdicts —
-        # behind driver-flagged reds and un-green _PRIORITY keys, which
-        # legitimately outrank them, so only assert up to the head
-        # capacity those leave free
-        from php_etl_spark.queries import _PRIORITY
-
-        outranking = len(
-            set(k for k in red_keys if k in QUERIES)
-            | {
-                k
-                for k in _PRIORITY
-                if k in QUERIES and k not in set(hash_green)
-            }
-        )
-        capacity = max(0, 50 - outranking)
-        missing = [k for k in upgraded if k not in set(window)]
-        assert len(missing) <= max(0, len(upgraded) - capacity), (
-            f"upgraded keys left out of the window with head capacity "
-            f"to spare: {missing}"
-        )
+                red = row["hash_match"] is not True and not rows_only
+                latest[key] = (rnd, red)
+    n_red = sum(1 for k in keys if latest.get(k, (0, False))[1])
+    assert all(latest[k][1] for k in keys[:n_red])
+    rounds = [latest.get(k, (0, False))[0] for k in keys[n_red:]]
+    assert rounds == sorted(rounds)
 
 
 def test_bench_baselines_match_baseline_md():

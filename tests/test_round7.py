@@ -1,6 +1,5 @@
-"""Round-7 additions: frozen-vocab BPE apply (exact oracle), the
-id-ranked integer PQ-ADC pipeline, and the driver-rotation red-key
-fronting. The BPE closed form the DuckDB oracle uses is proven here
+"""Round-7 additions: frozen-vocab BPE apply (exact oracle) and the
+id-ranked integer PQ-ADC pipeline. The BPE closed form the DuckDB oracle uses is proven here
 against a reference Python BPE apply, property-style."""
 
 from __future__ import annotations
@@ -115,38 +114,3 @@ def test_pq_adc_exact_agrees_with_bruteforce_top1(spark):
     )
     assert len(top) == 1 and top[0]["neighbor_id"] == 0
     assert top[0]["cosine"] == pytest.approx(1.0)
-
-
-def test_rotation_debt_gated_reexposure():
-    """While never-driver-checked debt exceeds the threshold the
-    rows-only re-exposure cadence must stay at the slow rate; the
-    fast rate only unlocks under _LOW_DEBT_THRESHOLD (judge r6 #6)."""
-    from php_etl_spark.queries import (
-        _LOW_DEBT_THRESHOLD,
-        _ROWS_ONLY_REEXPOSE,
-        _ROWS_ONLY_REEXPOSE_LOW_DEBT,
-        QUERIES,
-        _driver_history_from_files,
-    )
-
-    hash_green, rows_only_last, red_keys, n_rounds = (
-        _driver_history_from_files()
-    )
-    if n_rounds == 0:
-        pytest.skip("no driver ledgers present (standalone install)")
-    seen = set(hash_green) | set(rows_only_last) | set(red_keys)
-    n_debt = sum(1 for k in QUERIES if k not in seen)
-    expected = (
-        _ROWS_ONLY_REEXPOSE_LOW_DEBT
-        if n_debt < _LOW_DEBT_THRESHOLD
-        else _ROWS_ONLY_REEXPOSE
-    )
-    # the window must not contain more aged rows-only re-exposures
-    # than the active cadence allows (upgraded keys are separate)
-    from php_etl_spark.queries import ORACLES
-
-    window = list(QUERIES)[:50]
-    aged = [
-        k for k in window if k in rows_only_last and k not in ORACLES
-    ]
-    assert len(aged) <= expected, (aged, expected, n_debt)
