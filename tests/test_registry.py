@@ -113,19 +113,18 @@ def _write_ledgers(root, ledgers):
         (root / name).write_text(json.dumps(rows))
 
 
-def test_driver_order_rule(tmp_path):
-    """The driver verifies ``__spark_entry__.queries()`` in windows of
-    50 keys. Order: keys whose LATEST ledger row is red first, then the
-    rest by the round of their latest row, oldest first (never checked
-    = round 0); ties keep registration order. The round is the number
-    in the ledger's file name."""
-    from __spark_entry__ import _driver_order
+_NAMES = [
+    "z_never", "a_green", "b_demoted", "c_rows_only", "d_errored",
+    "e_retired", "f_r9", "g_flip", "h_green", "i_no_rows", "y_never",
+]
 
+
+def _write_synthetic_ledgers(root):
     green = {"hash_match": True}
     rows_only = {"err": "no_oracle", "spark_rows": 5}
     red = {"hash_match": False}
     _write_ledgers(
-        tmp_path,
+        root,
         {
             "CORRECTNESS_r01.json": {
                 "a_green": green,
@@ -147,11 +146,36 @@ def test_driver_order_rule(tmp_path):
             "CORRECTNESS_r10.json": {"g_flip": green, "unregistered": red},
         },
     )
-    names = [
-        "z_never", "a_green", "b_demoted", "c_rows_only", "d_errored",
-        "e_retired", "f_r9", "g_flip", "h_green", "i_no_rows", "y_never",
-    ]
-    assert _driver_order(names, root=str(tmp_path)) == [
+
+
+def test_driver_history_latest_row_wins(tmp_path):
+    """Only a key's LATEST ledger row counts: a newer red row demotes an
+    older green one, a newer green row retires an older red one, and
+    "latest" follows the round number in the file name, not its text."""
+    from __spark_entry__ import _driver_order
+
+    _write_synthetic_ledgers(tmp_path)
+    order = _driver_order(_NAMES, root=str(tmp_path))
+    red_prefix = order[:3]
+    assert "b_demoted" in red_prefix
+    assert "e_retired" not in red_prefix
+    # g's red round-9 row is older than its green round-10 row
+    assert "g_flip" not in red_prefix and order[-1] == "g_flip"
+    # a rows-only row is clean, and dates the key by its own round
+    assert "c_rows_only" not in red_prefix
+    assert order.index("c_rows_only") > order.index("a_green")
+
+
+def test_red_keys_front_of_window(tmp_path):
+    """The driver verifies ``__spark_entry__.queries()`` in windows of
+    50 keys. Order: keys whose LATEST ledger row is red first, then the
+    rest by the round of their latest row, oldest first (never checked
+    = round 0); ties keep registration order. The round is the number
+    in the ledger's file name."""
+    from __spark_entry__ import _driver_order
+
+    _write_synthetic_ledgers(tmp_path)
+    assert _driver_order(_NAMES, root=str(tmp_path)) == [
         "i_no_rows", "b_demoted", "d_errored",  # red, by round
         "z_never", "y_never",  # never checked: round 0
         "a_green", "h_green",  # round 1
@@ -161,7 +185,7 @@ def test_driver_order_rule(tmp_path):
     ]
     # no ledgers (standalone install): registration order
     (tmp_path / "empty").mkdir()
-    assert _driver_order(names, root=str(tmp_path / "empty")) == names
+    assert _driver_order(_NAMES, root=str(tmp_path / "empty")) == _NAMES
 
 
 def test_driver_order_unparseable_ledger_raises(tmp_path):
