@@ -54,9 +54,8 @@ def capped_item_sets(
     set_col: str = "_ms",
 ) -> DataFrame:
     """(basket, sorted array of the basket's first ``cap`` DISTINCT
-    non-null items) — the bounded-buffer basket build shared by
-    ``cooccurrence_pairs`` and the MST query's inline edge build
-    (r14, judge directive): ``dense_rank`` over the per-basket item
+    non-null items) — the bounded-buffer basket build under
+    ``cooccurrence_pairs``: ``dense_rank`` over the per-basket item
     order counts distinct items (duplicate rows share a rank, so
     dupes never eat the budget), and rows ranked past ``cap`` are
     dropped BEFORE ``collect_set`` — per-basket executor state is

@@ -12,10 +12,22 @@ Arrow enabled for the few pandas-UDF code paths.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# Entries in Spark's generated-class cache (Spark's default is 100).
+# Working sets measured on local[4] on a 4-vCPU VM: the perfbench query
+# mix generates 116 distinct classes and the ETL migration 73 (sf0.01),
+# the 35-key headline suite 641 (sf0.001). With 100 entries every warm
+# pass recompiles through Janino what the previous pass compiled.
+# Retaining 641 classes cost +15 MB heap after a full GC and +3 MB
+# metaspace, about 25 KB a class, so 4096 entries bound retention near
+# 100 MB of the 4 GiB driver heap.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -35,6 +47,13 @@ def get_spark(
       reference never needed (its "partitioner" was a 500-key batch
       spawner, /root/reference/sdk/process.php:129-147).
     - Arrow for pandas UDF exchange (vectorized Python boundary).
+    - ``spark.sql.codegen.cache.maxEntries``: sized to
+      ``CODEGEN_CACHE_ENTRIES`` so a session compiles each generated
+      class once. Spark's 100 entries are fewer than one pass of the
+      query mix (116 classes) or the headline suite (641) generates,
+      so every warm pass recompiled them. The conf is static: it
+      reaches only sessions this function creates, not a session
+      handed to ``tune_session``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -54,6 +73,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # events.parquet stores TIMESTAMP(NANOS); Spark ≥4.x reads it
         # as TIMESTAMP_NTZ (the legacy nanosAsLong conf is a no-op
         # there) and the catalog normalizes it to TimestampType.
@@ -72,6 +92,28 @@ def get_spark(
         attach_streaming_metrics(spark)
         spark._php_etl_stream_metrics = True
     return spark
+
+
+@contextmanager
+def conf_override(spark: SparkSession, key: str, value: str | None) -> Iterator[None]:
+    """Set the runtime conf ``key`` to ``value`` for the block, then
+    restore its previous value (or unset it if it had none). An unset
+    or empty ``value`` leaves the conf alone."""
+    if not value:
+        yield
+        return
+    try:
+        prev = spark.conf.get(key)
+    except Exception:  # noqa: BLE001 — unset conf
+        prev = None
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -127,6 +169,8 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
     The verification driver hands us its own SparkSession; settable
     runtime confs are applied here so catalog reads behave the same.
+    Static confs such as the generated-class cache size cannot be set
+    on a running session, so that session keeps Spark's defaults.
     """
     _ship_package(spark)
     for k, v in [

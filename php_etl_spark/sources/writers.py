@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from php_etl_spark.materialize import materialize
+from php_etl_spark.session import conf_override
 
 
 def _sink_path(conn: dict[str, Any], table: str) -> str:
@@ -209,7 +210,7 @@ def _partition_scoped_rewrite(
         incoming, obs, F.collect_set(F.struct(*partition_by)).alias("p")
     )
     present = {tuple(p) for p in obs.get["p"]}
-    with _conf_override(
+    with conf_override(
         spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"
     ):
         result.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
@@ -234,25 +235,6 @@ def _hive_part_value(v: Any) -> str:
     if isinstance(v, bool):
         return str(v).lower()
     return str(v)
-
-
-class _conf_override:
-    def __init__(self, spark: SparkSession, key: str, value: str):
-        self.spark, self.key, self.value = spark, key, value
-
-    def __enter__(self):
-        try:
-            self.prev = self.spark.conf.get(self.key)
-        except Exception:  # noqa: BLE001 — unset conf
-            self.prev = None
-        self.spark.conf.set(self.key, self.value)
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset(self.key)
-        else:
-            self.spark.conf.set(self.key, self.prev)
-        return False
 
 
 def upsert(

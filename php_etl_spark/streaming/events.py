@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from php_etl_spark.catalog import cached as catalog_cached
 from php_etl_spark.functions.exact import dec
+from php_etl_spark.session import conf_override
 
 
 def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -91,11 +92,11 @@ def run_to_memory(
     per-batch overhead; AQE never coalesces streaming state).
     ``SPARK_GRAFT_STREAM_PARTITIONS`` overrides it for the run."""
     spark = transformed.sparkSession
-    override = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if override:
-        spark.conf.set("spark.sql.shuffle.partitions", override)
-    try:
+    with conf_override(
+        spark,
+        "spark.sql.shuffle.partitions",
+        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS"),
+    ):
         name = f"stream_out_{uuid.uuid4().hex[:10]}"
         q = (
             transformed.writeStream.format("memory")
@@ -105,9 +106,6 @@ def run_to_memory(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if override:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
 
 
@@ -139,11 +137,11 @@ def run_to_files(
     base = out_dir or tempfile.mkdtemp(prefix="php_etl_stream_")
     data_dir = os.path.join(base, "out")
     ck_dir = os.path.join(base, "checkpoint")
-    override = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if override:
-        spark.conf.set("spark.sql.shuffle.partitions", override)
-    try:
+    with conf_override(
+        spark,
+        "spark.sql.shuffle.partitions",
+        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS"),
+    ):
         if output_mode == "append":
             q = (
                 transformed.writeStream.format("parquet")
@@ -167,9 +165,6 @@ def run_to_files(
                 .start()
             )
         q.awaitTermination()
-    finally:
-        if override:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     if not os.path.exists(data_dir):  # zero-row stream wrote nothing
         return spark.createDataFrame([], transformed.schema)
     return spark.read.schema(transformed.schema).parquet(data_dir)
@@ -272,11 +267,11 @@ def run_to_jdbc(
     # state-store count should track the keyspace, not the core count
     # (same knob as run_to_files, but defaulted: the per-batch upsert
     # round-trip dominates here, so fewer/larger state tasks win)
-    override = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if override:
-        spark.conf.set("spark.sql.shuffle.partitions", override)
-    try:
+    with conf_override(
+        spark,
+        "spark.sql.shuffle.partitions",
+        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
+    ):
         q = (
             transformed.writeStream.foreachBatch(_upsert_batch)
             .option("checkpointLocation", ck_dir)
@@ -285,9 +280,6 @@ def run_to_jdbc(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if override:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     return J.read_jdbc_table(spark, conn, table)
 
 
@@ -316,11 +308,11 @@ def run_to_versioned(
             V.upsert(batch_df.sparkSession, batch_df, table_dir, keys)
 
     ck_dir = tempfile.mkdtemp(prefix="php_etl_stream_ver_ck_")
-    override = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if override:
-        spark.conf.set("spark.sql.shuffle.partitions", override)
-    try:
+    with conf_override(
+        spark,
+        "spark.sql.shuffle.partitions",
+        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
+    ):
         q = (
             transformed.writeStream.foreachBatch(_publish_batch)
             .option("checkpointLocation", ck_dir)
@@ -329,9 +321,6 @@ def run_to_versioned(
             .start()
         )
         q.awaitTermination()
-    finally:
-        if override:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
     return V.read_current(spark, table_dir)
 
 

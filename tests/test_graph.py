@@ -72,13 +72,33 @@ def test_cooccurrence_guard_truncates_before_collect(spark):
 
 def test_capped_item_sets_truncates_deterministically(spark):
     """The shared basket build keeps the FIRST ``cap`` distinct items
-    in item order — the bounded-state contract the MST query's inline
-    edge build relies on."""
+    in item order — the bounded state ``cooccurrence_pairs`` builds
+    its size guard on."""
     rows = [(1, i) for i in range(20, 0, -1)] + [(1, 5), (1, 7)]
     df = spark.createDataFrame(rows, "basket: long, item: long")
     out = G.capped_item_sets(df, "basket", "item", cap=5, set_col="ms")
     [r] = out.collect()
     assert r["ms"] == [1, 2, 3, 4, 5]
+
+
+def test_mst_drops_over_cap_order(spark, tmp_path):
+    """graph_mst_boruvka drops an order with more than 1000 distinct
+    parts instead of keeping its first 1000: order 1 holds parts
+    1..1001, so truncating it would raise (1,2) and (3,4) to three
+    co-occurrences and add a (5,6) edge."""
+    from php_etl_spark.queries import QUERIES
+
+    rows = [(1, p) for p in range(1, 1002)]
+    rows += [(2, 1), (2, 2), (3, 1), (3, 2), (4, 3), (4, 4), (5, 3), (5, 4)]
+    rows += [(6, 5), (6, 6)]
+    spark.createDataFrame(rows, "l_orderkey: long, l_partkey: long").write.parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
+    got = {
+        (r["u"], r["v"], r["w"])
+        for r in QUERIES["graph_mst_boruvka"](spark, str(tmp_path)).collect()
+    }
+    assert got == {(1, 2, 500000), (3, 4, 500000)}
 
 
 def test_table_diff_classification(spark):

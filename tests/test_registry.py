@@ -332,6 +332,42 @@ def test_lineitem_totality_facts(spark):
     assert dup == 0
 
 
+# The perfbench query mix minus the keys whose adaptive plan differs
+# between runs (text_bm25_topk, sim_sparse_tfidf_topk,
+# graph_pagerank_exact and docs_dsir_weights compile a few new classes
+# on later runs however large the cache; none with AQE off).
+_WARM_KEYS = [
+    "agg_groupby_sum",
+    "join_star_q5",
+    "window_topk_per_group",
+    "stream_tumbling",
+    "pipeline_etl",
+    "sim_topk_bruteforce",
+    "sim_ann_lsh",
+    "ts_ewma_recursive",
+]
+
+
+def test_warm_pass_compiles_nothing(spark):
+    """A session from get_spark keeps every class it generated: a
+    second pass over the same keys compiles none. With Spark's default
+    100-entry cache the first pass's 116 classes do not fit and the
+    second pass recompiles most of them."""
+    from tests.conftest import SF_DIR
+
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+
+    def run_pass():
+        before = compiles.getCount()
+        for k in _WARM_KEYS:
+            QUERIES[k](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        return compiles.getCount() - before
+
+    run_pass()
+    assert run_pass() == 0
+
+
 def test_bench_rerun_outlier_selection():
     """The bench outlier re-run pass (judge r10 #2) must select exactly
     the queries whose measured time exceeds RERUN_RATIO x their own
