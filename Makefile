@@ -48,9 +48,8 @@ scaling:         ## tri-scale log-log slope probe over the headline suite
 
 all: lint coverage test sweep plans audit
 
-gate:            ## round-closing checklist (judge r7 #3): lint, tests,
-	##             tri-scale full sweep, plan gates, census, probes,
-	##             then bench LAST so it reads a quiet box.
+gate:            ## round-closing checklist: lint, tests, tri-scale full
+	##             sweep, plan gates, census, probes, then bench.
 	$(MAKE) lint coverage test
 	$(MAKE) sweep-tri
 	$(MAKE) plans audit

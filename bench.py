@@ -2,13 +2,23 @@
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "headline_suite_sec", "value": N, "unit": "sec",
+     "queries": {key: sec}, "cpu_s": {key: {kind: sec}},
+     "sf": ..., "scale_mult": ...}
 
 Each query is forced end-to-end with a noop-format write (full
 computation, no driver collect overhead). The headline set covers the
 engine's workload shapes: scan+agg, selective multiway join, window,
 event-time windows, the config-pipeline transform, MinHash-LSH dedup
 and brute-force vector top-k.
+
+``queries`` holds each key's minimum wall time over three reps, and
+``cpu_s`` the CPU seconds that rep spent, split by kind as perfbench
+splits them: ``work`` (the driver and the JVM threads running the
+engine), ``jit``, ``gc`` and ``pyworker`` (Python workers). Hypervisor
+steal moves wall time but not thread CPU (perfbench/METRICS.md,
+"Steadiness"), so a key whose wall time rose while its ``work`` CPU
+held was slowed by the host, not by the engine.
 """
 
 from __future__ import annotations
@@ -20,8 +30,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.run import _jvm_pid, cpu_delta, cpu_snapshot  # noqa: E402
 from php_etl_spark import queries as Q  # noqa: E402
 from php_etl_spark.session import get_spark  # noqa: E402
+from tools.scale_probe import release_storage  # noqa: E402
 
 HEADLINE = [
     "agg_groupby_sum",      # TPC-H Q1 shape: scan + grouped exact agg
@@ -33,130 +45,33 @@ HEADLINE = [
     "pipeline_etl",         # config pipeline: map + first-wins dedup
     "dedup_minhash_lsh",    # LLM: subquadratic near-dup
     "sim_topk_bruteforce",  # LLM: vector top-k
-    # round-3 additions (first-run baselines noted in BASELINE.md —
-    # suite totals before/after r3 are not directly comparable)
     "join_mktshare_q8",     # Q8 shape: dual-role dim star + ratio agg
     "dedup_semantic",       # LLM: SemDeDup cluster-bounded cosine prune
-    # round-4 additions: window + as-of families (previously the only
-    # windowed headline was topk) — first-run baselines in BASELINE.md
     "join_asof",            # as-of backward join (time-series PIT)
     "window_percent_rank_cume",  # rank-family window over lineitem
-    "agg_max_concurrent",   # segmented prefix-sum boundary sweep (r4 shape)
-    # round-4 late additions: token-explode family (the corpus-side
-    # cost center of an LLM pipeline) — first-run baselines in
-    # BASELINE.md
+    "agg_max_concurrent",   # segmented prefix-sum boundary sweep
     "docs_dsir_weights",    # LLM: hashed-unigram importance weights
     "text_bpe_pair_counts",  # LLM: BPE merge-iteration pair counting
-    # round-4 second batch: the geo family's join shape and the sparse
-    # lexical similarity path — first-run baselines in BASELINE.md
     "geo_grid_knn",         # geo: cell-bucketed proximity join + top-k
     "sim_sparse_tfidf_topk",  # LLM: df-bounded inverted-index cosine
-    # round-5 additions: ML-eval + late-interaction retrieval — first-
-    # run baselines in BASELINE.md
     "ml_auc_rank",          # rank-sum AUC, no global sort
     "sim_maxsim_late_interaction",  # ColBERT MaxSim, integer dots
-    # round-5 late additions: the keyed self-join projection and the
-    # grouped-Arrow stateful family (previously unbenched shapes) —
-    # first-run baselines in BASELINE.md
     "graph_bipartite_copurchase",  # per-order C(n,2) pair fan-out
     "ts_ewma_recursive",    # applyInPandas IIR recurrence per key
-    # round-5 closing additions: ranking-eval and forecast-backtest
-    # shapes — first-run baselines in BASELINE.md
     "ml_ndcg_mrr",          # exact-integer NDCG@5/MRR, per-query window
     "ts_forecast_backtest",  # Holt carry pass emitting one-step MAE
-    # round-5 second batch: iterative graph fixpoint and IR scoring —
-    # first-run baselines in BASELINE.md
     "graph_pagerank_exact",  # 6-round integer PageRank, per-round jobs
     "text_bm25_topk",       # token explode + broadcast corpus stats
-    # round-5 third batch: training-shard packing, corpus-wide span
-    # dedup, and compressed-domain retrieval — first-run baselines in
-    # BASELINE.md
     "docs_pack_sequences",  # segmented prefix-sum concat-and-chunk
     "docs_paragraph_dedup",  # global first-wins span dedup + reassembly
     "sim_binary_hamming_topk",  # 1-bit quantized XOR/popcount scan
-    # round-5 closing: single-pass closed-form fit and the bounded-
-    # frame robust window — first-run baselines in BASELINE.md
     "ml_ridge_closed_form",  # nine moments -> Cramer solve, one pass
     "window_hampel_filter",  # 7-sample sorted-frame median/MAD despike
-    # round-5 fifth session: the sketch (mapInPandas MG), exact
-    # similarity-join, and queueing-window shapes — first-run
-    # baselines in BASELINE.md
     "agg_heavy_hitters",     # per-partition Misra-Gries + exact recount
     "dedup_prefix_filter_join",  # rarity-prefix index + exact verify
     "event_lindley_queue",   # stacked prefix windows (queue sim)
-    # round-6 addition: the exact-substring measurement shape
-    # (positional anchor index join + diagonal islands) — first-run
-    # baseline in BASELINE.md
     "docs_longest_dup_substring",  # Lee-et-al ExactSubstr, distributed
 ]
-
-
-# Recorded first-run baseline per headline query (sf0.1, local[32]) —
-# the BASELINE.md per-query numbers, kept verbatim here so the outlier
-# re-run pass (judge r10 #2) can self-adjudicate: on a loaded box a
-# single query can read many-x its baseline from pure scheduler
-# contention (the r10 geo_grid_knn 7.9x artifact cost a judge
-# re-measurement). After the suite, any query whose min-of-three
-# exceeds RERUN_RATIO x its own first-run baseline gets ONE fresh
-# min-of-three re-run, recorded under "rerun" in the JSON — a
-# transient-load outlier re-measures near baseline, a real regression
-# reproduces, and either way the artifact carries its own evidence.
-FIRST_RUN_SEC = {
-    "agg_groupby_sum": 1.24,
-    "join_multiway": 1.18,
-    "join_star_q5": 1.485,
-    "join_lookup": 0.49,
-    "window_topk_per_group": 0.49,
-    "stream_tumbling": 1.04,
-    "pipeline_etl": 0.62,
-    "dedup_minhash_lsh": 1.99,
-    "sim_topk_bruteforce": 0.80,
-    "join_mktshare_q8": 1.198,
-    "dedup_semantic": 2.155,
-    "join_asof": 0.550,
-    "window_percent_rank_cume": 0.427,
-    "agg_max_concurrent": 0.874,
-    "docs_dsir_weights": 1.758,
-    "text_bpe_pair_counts": 0.394,
-    "geo_grid_knn": 0.668,
-    "sim_sparse_tfidf_topk": 1.045,
-    "ml_auc_rank": 1.028,
-    "sim_maxsim_late_interaction": 0.564,
-    "graph_bipartite_copurchase": 2.284,
-    "ts_ewma_recursive": 0.764,
-    "ml_ndcg_mrr": 1.473,
-    "ts_forecast_backtest": 0.634,
-    "graph_pagerank_exact": 5.405,
-    "text_bm25_topk": 0.851,
-    "docs_pack_sequences": 0.505,
-    "docs_paragraph_dedup": 0.481,
-    "sim_binary_hamming_topk": 0.324,
-    "ml_ridge_closed_form": 0.660,
-    "window_hampel_filter": 0.545,
-    "agg_heavy_hitters": 0.627,
-    "dedup_prefix_filter_join": 1.734,
-    "event_lindley_queue": 0.552,
-    "docs_longest_dup_substring": 2.772,
-}
-RERUN_RATIO = 2.5
-
-# FIRST_RUN_SEC is sf0.1/local[32]-specific. main() honors
-# SPARK_GRAFT_SF_DIR, and at any other SF the outlier pass would flag
-# nearly every query and emit a "rerun" block that reads as reproduced
-# regressions (judge ADVICE r11) — so the pass runs ONLY at this SF
-# and the JSON records rerun=null elsewhere.
-BASELINE_SF_DIR = "/root/testdata/sf0.1"
-
-
-def rerun_outliers(times: dict[str, float], ratio: float = RERUN_RATIO) -> list[str]:
-    """Names whose measured min-of-three exceeds ``ratio`` x their own
-    recorded first-run baseline — the set the re-run pass re-measures.
-    Pure so the selection logic is unit-testable without a suite run."""
-    return [
-        name
-        for name, sec in times.items()
-        if name in FIRST_RUN_SEC and sec > ratio * FIRST_RUN_SEC[name]
-    ]
 
 
 def force(df) -> int:
@@ -165,79 +80,43 @@ def force(df) -> int:
     return 0
 
 
-# Quiet-box floor for the load sentinel, re-calibrated min-of-five at
-# the start of every round (judge r7 directive #7 — it is box-state
-# dependent). r8: the opening calibration read 1.345 (min-of-five) but
-# a later genuinely-idle sitting read 0.921/0.985 — the opening run
-# was itself under residual load, so the floor is the DAY'S MINIMUM
-# across all sentinel readings (2026-08-15: 0.921 s), not the first
-# min-of-five. Calibrate late-round on an idle box when possible. A
-# sitting whose sentinel exceeds 1.2x this floor is flagged "loaded"
-# in the JSON itself, so uniform suite-wide inflation (the
-# r02/r04/r06 box-noise episodes) is self-diagnosing instead of
-# costing a judge round-trip (judge r6 directive #3).
-SENTINEL_FLOOR_SEC = 0.921
-SENTINEL_FLOOR_DATE = "2026-08-15"
-SENTINEL_LOADED_RATIO = 1.2
-
-# Pre-suite load gate (judge r9 directive #2): r8 and r9 driver bench
-# artifacts were both taken on a loaded box, so before the timed suite
-# starts, measure the sentinel and — if it reads above the loaded
-# ratio — wait and retry, bounded, so a transient load spike (another
-# process's gate sweep, a stray pytest) passes before the numbers the
-# judge must trust are taken. Attempts and readings are recorded in
-# the output JSON; if the retries exhaust, the suite runs anyway and
-# the JSON says so (pre_gate_exhausted) — the driver window is finite.
-PRE_GATE_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_BENCH_GATE_ATTEMPTS", "3"))
-PRE_GATE_WAIT_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_GATE_WAIT", "600"))
-
-
-def sentinel_time(spark) -> float:
-    """Pure-CPU + small-shuffle micro-op, independent of SF data:
-    12.5M rows PER CORE -> 8 chained xxhash64 -> 64-key grouped sum,
-    forced with a noop write (~1.15 s idle on this box — heavy enough
-    per row that compute dominates scheduler jitter). Inflates with
-    box contention exactly like the suite does. Min of two runs (a
-    loaded box inflates both).
-
-    Sized per core (one partition per core, constant rows/core) so the
-    reading is core-count-independent: at the 32-core primary config
-    this is bit-for-bit the original fixed 400M-row/32-partition job
-    the 0.921 s floor was calibrated on, while at the driver's
-    lower-core-count scaling runs the old FIXED-size sentinel read
-    ~4x the floor by construction (3.76 s at 8 cores, r13 measured),
-    which made the pre-suite load gate unpassable and burned its full
-    2x600 s wait on every such sitting. Same work per core = same
-    idle-box wall time at any core count, so one floor serves all
-    configs (a measurement-methodology fix, noted in
-    OPTIMIZATION_r13.md)."""
-    from pyspark.sql import functions as F
-
-    cores = spark.sparkContext.defaultParallelism
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        c = F.col("id")
-        for _h in range(8):
-            c = F.xxhash64(c)
-        df = (
-            spark.range(0, 12_500_000 * cores, 1, cores)
-            .select((c % 64).alias("k"), F.col("id"))
-            .groupBy("k")
-            .agg(F.sum("id").alias("s"))
-        )
-        force(df)
-        best = min(best, time.time() - t0)
-    return round(best, 3)
+def time_queries(
+    spark, names: list[str], sf_dir: str, reps: int = 3
+) -> tuple[dict[str, float], dict[str, dict[str, float]]]:
+    """Time each key ``reps`` times, building its plan afresh each rep.
+    Returns ({key: min wall seconds}, {key: that rep's CPU seconds by
+    kind}). Every rep starts with the storage earlier reps pinned
+    released, outside the timed window, so a late key does not run
+    against an early key's blocks."""
+    jvm = _jvm_pid()
+    times: dict[str, float] = {}
+    cpu: dict[str, dict[str, float]] = {}
+    for name in names:
+        best = float("inf")
+        for _ in range(reps):
+            release_storage(spark)
+            before = cpu_snapshot(jvm)
+            t0 = time.perf_counter()
+            force(Q.QUERIES[name](spark, sf_dir))
+            wall = time.perf_counter() - t0
+            used = cpu_delta(before, cpu_snapshot(jvm))
+            if wall < best:
+                best = wall
+                cpu[name] = {k: round(v, 2) for k, v in used.items()}
+        times[name] = round(best, 3)
+    return times, cpu
 
 
 def main() -> int:
     # streaming state-store count should track the keyspace (5 event
-    # types x 24 windows here), not the 32-core default — each store
+    # types x 24 windows here), not the core count — each store
     # instance has fixed per-batch overhead
     os.environ.setdefault("SPARK_GRAFT_STREAM_PARTITIONS", "8")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
+    # opt-in input multiplier (catalog.py); recorded so runs at
+    # different multipliers are never compared as like for like
+    scale_mult = max(1, int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "1")))
     spark = get_spark("php-etl-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -251,93 +130,16 @@ def main() -> int:
             except Exception:
                 pass
 
-    # pre-suite load gate: spin (bounded) until the box reads quiet
-    pre_gate: list[float] = []
-    for attempt in range(max(1, PRE_GATE_ATTEMPTS)):
-        s = sentinel_time(spark)
-        pre_gate.append(s)
-        if s <= SENTINEL_LOADED_RATIO * SENTINEL_FLOOR_SEC:
-            break
-        if attempt < PRE_GATE_ATTEMPTS - 1:
-            time.sleep(PRE_GATE_WAIT_SEC)
-    pre_gate_exhausted = pre_gate[-1] > SENTINEL_LOADED_RATIO * SENTINEL_FLOOR_SEC
-
-    sentinel_before = pre_gate[-1]
-
-    # min of three timed runs per query (r6, was min-of-two): one-shot
-    # numbers on a shared box carry 10-20% scheduler noise — two of five
-    # driver rounds recorded box-load artifacts; the min measures the
-    # engine. Totals across the harness change are not comparable.
-    times: dict[str, float] = {}
-    for name in HEADLINE:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            force(Q.QUERIES[name](spark, sf_dir))
-            best = min(best, time.time() - t0)
-        times[name] = round(best, 3)
-
-    sentinel_after = sentinel_time(spark)
-    sentinel = min(sentinel_before, sentinel_after)
-    floor = SENTINEL_FLOOR_SEC
-    loaded = bool(floor and sentinel > SENTINEL_LOADED_RATIO * floor)
-
-    # outlier re-run pass (judge r10 #2): re-measure every query whose
-    # min-of-three exceeded RERUN_RATIO x its own first-run baseline —
-    # a box-load artifact re-reads near baseline here (the suite's load
-    # spike has usually passed by the time the pass runs), a real
-    # regression reproduces; either way BENCH_r{N}.json adjudicates
-    # itself instead of costing a judge re-measurement.
-    # ... but only at the SCALE the baselines were recorded at: at any
-    # other scale every query trips the ratio by construction and the
-    # block would read as 35 reproduced regressions (judge ADVICE r11).
-    # Gate on the parsed sf value, not path identity — the baselines
-    # depend on the scale factor, not where the dataset lives (a copy
-    # of sf0.1 under another root must still self-adjudicate).
-    baseline_sf = float(
-        BASELINE_SF_DIR.rstrip("/").split("sf")[-1]
-    )
-    # the opt-in scaling multiplier (catalog.py, judge r13 directive
-    # #8) inflates every query by ~mult by construction — the outlier
-    # pass would read that as 35 reproduced regressions, so it only
-    # runs at mult=1 (the JSON records the active value either way)
-    scale_mult = max(1, int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "1")))
-    at_baseline_sf = sf == baseline_sf and scale_mult == 1
-    rerun: dict[str, float] | None = {} if at_baseline_sf else None
-    if at_baseline_sf:
-        for name in rerun_outliers(times):
-            best = float("inf")
-            for _ in range(3):
-                t0 = time.time()
-                force(Q.QUERIES[name](spark, sf_dir))
-                best = min(best, time.time() - t0)
-            rerun[name] = round(best, 3)
-    # the re-runs execute AFTER sentinel_after, so they need their own
-    # load context: without it, a spike that starts during the re-run
-    # pass would read as a "reproduced regression" inside an artifact
-    # that says loaded=false — the exact ambiguity the pass removes
-    sentinel_rerun = sentinel_time(spark) if rerun else None
-
-    total = round(sum(times.values()), 3)
+    times, cpu = time_queries(spark, HEADLINE, sf_dir)
     print(
         json.dumps(
             {
                 "metric": "headline_suite_sec",
-                "value": total,
+                "value": round(sum(times.values()), 3),
                 "unit": "sec",
                 "queries": times,
+                "cpu_s": cpu,
                 "sf": sf,
-                "sentinel_before_sec": sentinel_before,
-                "sentinel_after_sec": sentinel_after,
-                "pre_gate_sentinels_sec": pre_gate,
-                "pre_gate_wait_sec": PRE_GATE_WAIT_SEC,
-                "pre_gate_exhausted": pre_gate_exhausted,
-                "sentinel_floor_sec": floor,
-                "sentinel_floor_date": SENTINEL_FLOOR_DATE,
-                "loaded": loaded,
-                "rerun_ratio": RERUN_RATIO,
-                "rerun": rerun,
-                "sentinel_rerun_sec": sentinel_rerun,
                 "scale_mult": scale_mult,
             }
         )

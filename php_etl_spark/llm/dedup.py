@@ -83,23 +83,39 @@ def jaccard_pairs(
     """
     sets_df = materialize(_shingle_sets(df, text_col, id_col, n))
     if candidates is None:
-        # one grouped pass builds each shingle's posting list; the df
-        # cutoff is the collected size (identical to the old
-        # groupBy-count + join-back: df == |docs containing shingle|,
-        # shingle sets being distinct per doc), and pairs stream
-        # in-row (_pairs_in_group) instead of a two-sided self-join
-        sh = sets_df.select("doc", F.explode("sh").alias("shingle"))
+        candidates = _shingle_index_pairs(sets_df, max_doc_freq)
+    return _exact_jaccard_on_candidates(candidates, sets_df, threshold)
+
+
+def _shingle_index_pairs(sets_df: DataFrame, max_doc_freq: int | None) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs sharing a shingle whose document
+    frequency is at most ``max_doc_freq`` (None: any frequency), from
+    one grouped pass over ``_shingle_sets`` output. Pairs stream in-row
+    (``_pairs_in_group``) instead of a two-sided self-join.
+
+    Bounded, each posting list is built by ``capped_item_sets`` with
+    cap ``max_doc_freq + 1``: rows ranked past the cap are dropped
+    before the collect, so a boilerplate shingle never buffers its
+    whole list in one task, and a list that reached the cap is exactly
+    one over ``max_doc_freq`` (shingle sets are distinct per doc, so
+    the list size is the df) and is dropped whole, as
+    ``cooccurrence_pairs`` drops over-cap baskets."""
+    from php_etl_spark.operators.graph import capped_item_sets
+
+    sh = sets_df.select("doc", F.explode("sh").alias("shingle"))
+    if max_doc_freq is None:
         postings = sh.groupBy("shingle").agg(
             F.sort_array(F.collect_list("doc")).alias("ms")
         ).filter(F.size("ms") >= 2)
-        if max_doc_freq is not None:
-            postings = postings.filter(F.size("ms") <= max_doc_freq)
-        candidates = (
-            _pairs_in_group(postings)
-            .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
-            .distinct()
-        )
-    return _exact_jaccard_on_candidates(candidates, sets_df, threshold)
+    else:
+        postings = capped_item_sets(
+            sh, "shingle", "doc", cap=max_doc_freq + 1, set_col="ms"
+        ).filter(F.size("ms").between(2, max_doc_freq))
+    return (
+        _pairs_in_group(postings)
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
+        .distinct()
+    )
 
 
 def _pairs_in_group(members: DataFrame, list_col: str = "ms") -> DataFrame:
@@ -885,19 +901,7 @@ def containment_pairs(
     candidate is scored once and emits up to two directed rows, so
     the scoring cost matches the Jaccard path."""
     sets_df = materialize(_shingle_sets(df, text_col, id_col, n))
-    # grouped posting lists + in-row pair streaming (r13, see
-    # _pairs_in_group): same bounded index, no self-join
-    sh = sets_df.select("doc", F.explode("sh").alias("shingle"))
-    postings = sh.groupBy("shingle").agg(
-        F.sort_array(F.collect_list("doc")).alias("ms")
-    ).filter(F.size("ms") >= 2)
-    if max_doc_freq is not None:
-        postings = postings.filter(F.size("ms") <= max_doc_freq)
-    candidates = (
-        _pairs_in_group(postings)
-        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
-        .distinct()
-    )
+    candidates = _shingle_index_pairs(sets_df, max_doc_freq)
     sa = sets_df.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = sets_df.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"))
     scored = (

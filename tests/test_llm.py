@@ -786,7 +786,8 @@ class TestBoundedJaccardDefault:
             == 1000
         )
 
-    def test_stop_shingle_produces_no_candidates(self, spark):
+    @pytest.mark.parametrize("pairs", ["jaccard_pairs", "containment_pairs"])
+    def test_stop_shingle_produces_no_candidates(self, spark, pairs):
         from php_etl_spark.llm import dedup as D
 
         # every doc ends with the same boilerplate 3-gram; the bodies
@@ -798,10 +799,29 @@ class TestBoundedJaccardDefault:
             for i in range(6)
         ]
         docs = spark.createDataFrame(rows, ["doc_id", "text"])
-        got = D.jaccard_pairs(
+        got = getattr(D, pairs)(
             docs, n=3, threshold=0.0, max_doc_freq=3
         ).collect()
         assert got == []
+
+    @pytest.mark.parametrize("pairs", ["jaccard_pairs", "containment_pairs"])
+    def test_bounded_index_ranks_before_collect(self, spark, pairs):
+        """The df cap bounds each posting list while it is built: rows
+        are ranked per shingle and cut at the cap below the collecting
+        aggregate, so a boilerplate shingle never buffers its whole
+        list in one task."""
+        import re
+
+        from php_etl_spark.llm import dedup as D
+
+        rows = [(i, f"body {i} all rights reserved") for i in range(6)]
+        docs = spark.createDataFrame(rows, ["doc_id", "text"])
+        df = getattr(D, pairs)(docs, n=3, threshold=0.0, max_doc_freq=3)
+        lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+        collect = next(i for i, ln in enumerate(lines) if "collect_" in ln)
+        assert any(
+            re.search(r"\bWindow(GroupLimit)? \[", ln) for ln in lines[collect:]
+        ), "\n".join(lines)
 
     def test_near_dups_survive_the_cutoff(self, spark):
         from php_etl_spark.llm import dedup as D

@@ -25,7 +25,6 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -36,16 +35,9 @@ SLOPE_BUDGET = 1.3
 
 
 # shared with the scale probe so the blocking-unpersist semantics can
-# never diverge between the two harnesses (each timed rep here rebuilds
-# its frames from scratch, so blocks pinned by dead frames are pure
-# leak — the class that OOMed the r10 gate in graph_k_truss@sf0.1;
-# released OUTSIDE the timed window, so timings are unchanged except
-# for no longer degrading as the suite progresses)
+# never diverge between the two harnesses (the warm-up pins blocks that
+# no later rep reads); released outside any timed window
 from tools.scale_probe import release_storage  # noqa: E402
-
-
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> int:
@@ -70,22 +62,16 @@ def main() -> int:
     # warm code paths once
     for name in names:
         try:
-            force(Q.QUERIES[name](spark, SFS[0]))
+            bench.force(Q.QUERIES[name](spark, SFS[0]))
         except Exception:  # noqa: BLE001 — warmup best-effort
             pass
         release_storage(spark)
 
     bad = 0
     for name in names:
-        times = []
-        for sf in SFS:
-            best = float("inf")
-            for _ in range(2):
-                release_storage(spark)
-                t0 = time.time()
-                force(Q.QUERIES[name](spark, sf))
-                best = min(best, time.time() - t0)
-            times.append(best)
+        times = [
+            bench.time_queries(spark, [name], sf, reps=2)[0][name] for sf in SFS
+        ]
         slope_small = math.log10(times[1] / times[0]) if times[0] > 0 else None
         slope_large = math.log10(times[2] / times[1]) if times[1] > 0 else None
         flag = slope_large is not None and slope_large > SLOPE_BUDGET
