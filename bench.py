@@ -1,6 +1,7 @@
 """Benchmark harness: runs the headline queries at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line::
+``local[n]`` (n from ``session.local_cpus``: ``$SPARK_GRAFT_CPUS``, else
+the CPUs the process may run on) and prints ONE JSON line::
 
     {"metric": "headline_suite_sec", "value": N, "unit": "sec",
      "queries": {key: sec}, "cpu_s": {key: {kind: sec}},

@@ -915,17 +915,23 @@ def containment_pairs(
             F.size("sh_b").cast("double").alias("sz_b"),
         )
     )
-    fwd = scored.select(
-        F.col("doc_a").alias("contained_doc"),
-        F.col("doc_b").alias("container_doc"),
-        (F.col("i") / F.col("sz_a")).alias("containment"),
+    # both directions come out of the one scored row: a union of two
+    # selects over ``scored`` would build the index and joins twice
+    directions = F.inline(
+        F.array(
+            F.struct(
+                F.col("doc_a").alias("contained_doc"),
+                F.col("doc_b").alias("container_doc"),
+                (F.col("i") / F.col("sz_a")).alias("containment"),
+            ),
+            F.struct(
+                F.col("doc_b").alias("contained_doc"),
+                F.col("doc_a").alias("container_doc"),
+                (F.col("i") / F.col("sz_b")).alias("containment"),
+            ),
+        )
     )
-    rev = scored.select(
-        F.col("doc_b").alias("contained_doc"),
-        F.col("doc_a").alias("container_doc"),
-        (F.col("i") / F.col("sz_b")).alias("containment"),
-    )
-    return fwd.unionByName(rev).filter(F.col("containment") >= threshold)
+    return scored.select(directions).filter(F.col("containment") >= threshold)
 
 
 def longest_duplicate_substrings(

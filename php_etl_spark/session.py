@@ -3,10 +3,10 @@
 The reference engine has no runtime tuning beyond hard-coded batch
 sizes (/root/reference/sdk/process.php:137 batches 500 keys per
 worker process). Here partitioning/parallelism is Spark's job; we
-pick defaults that hold from local[32] tests up to a large cluster:
-AQE on (runtime coalescing + skew-join splitting), a shuffle
-partition count sized to the local core count but overridable, and
-Arrow enabled for the few pandas-UDF code paths.
+pick defaults that hold from a laptop up to a large cluster: AQE on
+(runtime coalescing + skew-join splitting), a shuffle partition count
+sized to the local core count but overridable, and Arrow enabled for
+the few pandas-UDF code paths.
 """
 
 from __future__ import annotations
@@ -17,7 +17,15 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def local_cpus() -> int:
+    """Cores a local session uses, and its default shuffle partition
+    count: ``SPARK_GRAFT_CPUS`` when set, else the CPUs this process
+    may run on (its affinity mask, which honours a container's cpuset
+    where ``os.cpu_count`` reports the whole host)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
 
 # Entries in Spark's generated-class cache (Spark's default is 100).
 # Working sets measured on local[4] on a 4-vCPU VM: the perfbench query
@@ -54,11 +62,25 @@ def get_spark(
       so every warm pass recompiled them. The conf is static: it
       reaches only sessions this function creates, not a session
       handed to ``tune_session``.
+    - ``spark.python.sql.dataFrameDebugging.enabled`` off: PySpark
+      otherwise wraps every ``functions`` and ``Column`` call to send
+      its Python call site to the JVM, which Spark documents as "a
+      non-trivial performance overhead because of the stack trace
+      collection". Off, one warm pass of the perfbench query mix sends
+      1,777 py4j calls and lookups instead of 4,627. Errors keep their
+      class, error condition and ``== DataFrame ==`` context; only the
+      Python ``file:line`` after "was called from" becomes a JVM frame.
+      Pass
+      ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+      "true"}`` to get it back while debugging. The conf has to be on
+      ``SparkSession.builder``: it is a core conf that
+      ``spark.conf.set`` rejects, and PySpark caches it per process at
+      the first wrapped call, so ``tune_session`` cannot turn it off on
+      a session it is handed.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{local_cpus()}]")
         # local mode defaults to a 1 GiB JVM heap — far too small for
         # 32 concurrent tasks; static conf, applies on first creation
         .config(
@@ -66,7 +88,7 @@ def get_spark(
         )
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or local_cpus()),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -74,6 +96,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # events.parquet stores TIMESTAMP(NANOS); Spark ≥4.x reads it
         # as TIMESTAMP_NTZ (the legacy nanosAsLong conf is a no-op
         # there) and the catalog normalizes it to TimestampType.
@@ -169,15 +192,16 @@ def tune_session(spark: SparkSession) -> SparkSession:
 
     The verification driver hands us its own SparkSession; settable
     runtime confs are applied here so catalog reads behave the same.
-    Static confs such as the generated-class cache size cannot be set
-    on a running session, so that session keeps Spark's defaults.
+    Static and core confs, such as the generated-class cache size and
+    PySpark's call-site capture, cannot be set on a running session,
+    so that session keeps Spark's defaults for them.
     """
     _ship_package(spark)
     for k, v in [
         ("spark.sql.adaptive.enabled", "true"),
         ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
         ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)),
+        ("spark.sql.shuffle.partitions", str(local_cpus())),
     ]:
         try:
             spark.conf.set(k, v)

@@ -843,6 +843,20 @@ class TestBoundedJaccardDefault:
         assert pairs == {(0, 1)}
 
 
+def test_containment_pairs_builds_the_index_once(spark, catalog):
+    """Both containment directions come from one scored frame, so the
+    plan holds one shingle index: a partial and a final aggregate keyed
+    on the shingle, where two unioned directions held two of each."""
+    import re
+
+    df = D.containment_pairs(
+        catalog.documents, n=3, threshold=0.5, max_doc_freq=None
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    index_aggs = re.findall(r"HashAggregate\(keys=\[shingle#", plan)
+    assert len(index_aggs) == 2, plan
+
+
 def test_semantic_dedup_kernel_matches_sql_bitwise(spark):
     """The numpy-matmul within-cell kernel must be BIT-identical to
     the SQL dot-product fold: quantized components are exact integers,

