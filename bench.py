@@ -109,10 +109,6 @@ def time_queries(
 
 
 def main() -> int:
-    # streaming state-store count should track the keyspace (5 event
-    # types x 24 windows here), not the core count — each store
-    # instance has fixed per-batch overhead
-    os.environ.setdefault("SPARK_GRAFT_STREAM_PARTITIONS", "8")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").split("sf")[-1]) if "sf" in sf_dir else -1.0
     # opt-in input multiplier (catalog.py); recorded so runs at

@@ -11,7 +11,11 @@ the few pandas-UDF code paths.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -118,13 +122,9 @@ def get_spark(
 
 
 @contextmanager
-def conf_override(spark: SparkSession, key: str, value: str | None) -> Iterator[None]:
+def conf_override(spark: SparkSession, key: str, value: str) -> Iterator[None]:
     """Set the runtime conf ``key`` to ``value`` for the block, then
-    restore its previous value (or unset it if it had none). An unset
-    or empty ``value`` leaves the conf alone."""
-    if not value:
-        yield
-        return
+    restore its previous value (or unset it if it had none)."""
     try:
         prev = spark.conf.get(key)
     except Exception:  # noqa: BLE001 — unset conf
@@ -139,6 +139,32 @@ def conf_override(spark: SparkSession, key: str, value: str | None) -> Iterator[
             spark.conf.set(key, prev)
 
 
+_SCRATCH_ROOT: list[str] = []
+
+
+def scratch_root() -> str:
+    """This process's scratch directory, made under the temp dir
+    (``tempfile.gettempdir()``) on first use and removed with all it
+    holds at interpreter exit. Everything the engine writes for its own
+    use goes under it: default streaming checkpoints, streaming output,
+    and the destinations the registry's sink and scan keys write and
+    read back. Frames over those files stay readable until the process
+    ends."""
+    if not _SCRATCH_ROOT:
+        root = tempfile.mkdtemp(prefix="php_etl_spark_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _SCRATCH_ROOT.append(root)
+    return _SCRATCH_ROOT[0]
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new empty directory under the scratch root, named ``prefix``
+    plus a random suffix."""
+    path = os.path.join(scratch_root(), prefix + uuid.uuid4().hex[:12])
+    os.mkdir(path)
+    return path
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship the engine package to Python workers (``addPyFile`` — the
     runtime form of ``spark-submit --py-files``). Executors unpickle
@@ -150,21 +176,9 @@ def _ship_package(spark: SparkSession) -> None:
     import php_etl_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(php_etl_spark.__file__))
-    zip_path = os.path.join(
-        os.environ.get("TMPDIR", "/tmp"), "php_etl_spark_pyfiles.zip"
-    )
-    newest_src = max(
-        (
-            os.path.getmtime(os.path.join(root, fn))
-            for root, _dirs, files in os.walk(pkg_dir)
-            for fn in files
-            if fn.endswith(".py")
-        ),
-        default=0.0,
-    )
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < newest_src:
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
+    zip_path = os.path.join(scratch_root(), "php_etl_spark_pyfiles.zip")
+    if not os.path.exists(zip_path):
+        with zipfile.ZipFile(zip_path, "w") as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 for fn in files:
                     if fn.endswith(".py"):
@@ -173,7 +187,6 @@ def _ship_package(spark: SparkSession) -> None:
                             "php_etl_spark", os.path.relpath(full, pkg_dir)
                         )
                         zf.write(full, arc)
-        os.replace(tmp, zip_path)
     try:
         spark.sparkContext.addPyFile(zip_path)
     except Exception as exc:  # noqa: BLE001 — inspect, don't swallow

@@ -22,6 +22,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from php_etl_spark.materialize import materialize
+
 
 def _table_path(conn: dict[str, Any], table: str) -> str:
     base = conn.get("path", ".")
@@ -110,11 +112,10 @@ def read_csv_with_quarantine(
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
     )
-    # PERMISSIVE leaves _corrupt_record unmaterializable without a
-    # cache barrier (Spark refuses to filter on only the internal
-    # corrupt column of a lazily-parsed CSV); selecting all columns
-    # through a cache makes the split stable
-    raw = raw.cache()
+    # Spark refuses a query over a raw CSV scan that references only
+    # the internal corrupt column; pinning the parsed rows cuts that
+    # lineage and parses each line once for both halves
+    raw = materialize(raw)
     clean = raw.filter(F.col("_corrupt_record").isNull()).drop(
         "_corrupt_record"
     )

@@ -14,15 +14,16 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from php_etl_spark.catalog import cached as catalog_cached
 from php_etl_spark.functions.exact import dec
-from php_etl_spark.session import conf_override
+from php_etl_spark.session import scratch_dir, scratch_root
 
 
 def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -34,20 +35,20 @@ def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     stream straight from the original path, no indirection. Only a
     bare single-file table — the local testdata layout — is exposed
     through a driver-local symlink dir, because the streaming file
-    source lists directories. That fallback assumes the driver's
-    filesystem is visible to executors (true in local mode); on a
-    real cluster, materialize single-file tables into a directory on
-    the shared store instead."""
+    source lists directories. The symlink dir lives under the
+    process's scratch root (``session.scratch_root``) with a name fixed
+    per table path, so a checkpoint sees the same source file on every
+    run of one process. That fallback assumes the driver's filesystem
+    is visible to executors (true in local mode); on a real cluster,
+    materialize single-file tables into a directory on the shared
+    store instead."""
     path = f"{sf_dir}/{table}.parquet"
     # session-memoized raw scan: the schema probe otherwise costs a
     # fresh footer read + file index per streaming-query construction
     schema = catalog_cached(spark, sf_dir).raw(table).schema
     if os.path.isfile(path):
-        # the streaming file source needs a directory; expose the
-        # single-file table through a symlink dir (testdata is
-        # read-only)
         link_dir = os.path.join(
-            tempfile.gettempdir(),
+            scratch_root(),
             f"stream_{table}_{hashlib.sha1(path.encode()).hexdigest()[:10]}",
         )
         os.makedirs(link_dir, exist_ok=True)
@@ -72,6 +73,36 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sdf
 
 
+def _drain(
+    transformed: DataFrame,
+    output_mode: str,
+    sink: str | Callable[[DataFrame, int], None],
+    options: dict[str, str] | None = None,
+    checkpoint_dir: str | None = None,
+) -> StreamingQuery:
+    """Run a streaming plan under an ``availableNow`` trigger until it
+    has consumed every source file present at start, and return the
+    terminated query (its ``recentProgress`` and ``explain`` stay
+    readable). ``sink`` is a format name, configured by ``options``, or
+    a ``foreachBatch`` function. Without ``checkpoint_dir`` the run
+    checkpoints into a fresh directory under the scratch root, so it
+    starts from the beginning of its sources.
+
+    The number of state-store instances is the session's
+    ``spark.sql.shuffle.partitions`` at query start (AQE never
+    coalesces streaming state)."""
+    writer = transformed.writeStream.outputMode(output_mode).option(
+        "checkpointLocation", checkpoint_dir or scratch_dir("checkpoint_")
+    )
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.format(sink).options(**(options or {}))
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
 def run_to_memory(
     transformed: DataFrame, output_mode: str = "complete"
 ) -> DataFrame:
@@ -84,29 +115,12 @@ def run_to_memory(
     TEST/ORACLE USE ONLY: the memory sink materializes the whole
     result on the driver. Production paths (and the registered
     queries) go through ``run_to_files``, which keeps results on
-    executor-written parquet.
-
-    The number of state-store instances equals
-    ``spark.sql.shuffle.partitions`` at query start and should track
-    the KEYSPACE size, not the core count (each store has fixed
-    per-batch overhead; AQE never coalesces streaming state).
-    ``SPARK_GRAFT_STREAM_PARTITIONS`` overrides it for the run."""
-    spark = transformed.sparkSession
-    with conf_override(
-        spark,
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS"),
-    ):
-        name = f"stream_out_{uuid.uuid4().hex[:10]}"
-        q = (
-            transformed.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    executor-written parquet."""
+    name = f"stream_out_{uuid.uuid4().hex[:10]}"
+    # the memory sink's table name is the query name, which
+    # DataStreamWriter.queryName stores as this same option
+    _drain(transformed, output_mode, "memory", {"queryName": name})
+    return transformed.sparkSession.table(name)
 
 
 def run_to_files(
@@ -131,40 +145,23 @@ def run_to_files(
       shape) this is exactly the final state. Multi-batch callers get
       a delta log and dedup to latest downstream.
 
-    Returns a batch DataFrame over the written files (explicit schema,
-    so a zero-row result still reads)."""
+    Without ``out_dir`` the output and its checkpoint go to a fresh
+    directory under the scratch root. Returns a batch DataFrame over
+    the written files (explicit schema, so a zero-row result still
+    reads)."""
     spark = transformed.sparkSession
-    base = out_dir or tempfile.mkdtemp(prefix="php_etl_stream_")
+    base = out_dir or scratch_dir("stream_")
     data_dir = os.path.join(base, "out")
     ck_dir = os.path.join(base, "checkpoint")
-    with conf_override(
-        spark,
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS"),
-    ):
-        if output_mode == "append":
-            q = (
-                transformed.writeStream.format("parquet")
-                .option("path", data_dir)
-                .option("checkpointLocation", ck_dir)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        else:
-            mode = "overwrite" if output_mode == "complete" else "append"
+    if output_mode == "append":
+        _drain(transformed, "append", "parquet", {"path": data_dir}, ck_dir)
+    else:
+        mode = "overwrite" if output_mode == "complete" else "append"
 
-            def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-                batch_df.write.mode(mode).parquet(data_dir)
+        def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
+            batch_df.write.mode(mode).parquet(data_dir)
 
-            q = (
-                transformed.writeStream.foreachBatch(_write_batch)
-                .option("checkpointLocation", ck_dir)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-        q.awaitTermination()
+        _drain(transformed, output_mode, _write_batch, checkpoint_dir=ck_dir)
     if not os.path.exists(data_dir):  # zero-row stream wrote nothing
         return spark.createDataFrame([], transformed.schema)
     return spark.read.schema(transformed.schema).parquet(data_dir)
@@ -190,8 +187,6 @@ def run_dedup_ingest(
     batch the self-contained form below is equivalent.
 
     Returns the batch readback of admitted documents."""
-    from pyspark.sql import functions as F
-
     from php_etl_spark.llm.dedup import incremental_near_dup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -199,9 +194,7 @@ def run_dedup_ingest(
     stream = stream_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") > corpus_max_id
     )
-    base = tempfile.mkdtemp(prefix="php_etl_ingest_")
-    data_dir = os.path.join(base, "out")
-    ck_dir = os.path.join(base, "checkpoint")
+    data_dir = os.path.join(scratch_dir("ingest_"), "out")
 
     def _admit(batch_df: DataFrame, _batch_id: int) -> None:
         dups = (
@@ -214,13 +207,7 @@ def run_dedup_ingest(
         )
         admitted.write.mode("append").parquet(data_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(_admit)
-        .option("checkpointLocation", ck_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream, "append", _admit)
     if not os.path.exists(data_dir):
         return spark.createDataFrame([], docs.schema)
     return spark.read.schema(docs.schema).parquet(data_dir)
@@ -263,23 +250,7 @@ def run_to_jdbc(
         if not batch_df.isEmpty():
             J.jdbc_upsert(batch_df.sparkSession, batch_df, conn, table, keys)
 
-    ck_dir = tempfile.mkdtemp(prefix="php_etl_stream_jdbc_ck_")
-    # state-store count should track the keyspace, not the core count
-    # (same knob as run_to_files, but defaulted: the per-batch upsert
-    # round-trip dominates here, so fewer/larger state tasks win)
-    with conf_override(
-        spark,
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
-    ):
-        q = (
-            transformed.writeStream.foreachBatch(_upsert_batch)
-            .option("checkpointLocation", ck_dir)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(transformed, output_mode, _upsert_batch)
     return J.read_jdbc_table(spark, conn, table)
 
 
@@ -301,27 +272,12 @@ def run_to_versioned(
     object store. Returns a batch read of the final version."""
     from php_etl_spark.sources import versioned as V
 
-    spark = transformed.sparkSession
-
     def _publish_batch(batch_df: DataFrame, _batch_id: int) -> None:
         if not batch_df.isEmpty():
             V.upsert(batch_df.sparkSession, batch_df, table_dir, keys)
 
-    ck_dir = tempfile.mkdtemp(prefix="php_etl_stream_ver_ck_")
-    with conf_override(
-        spark,
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
-    ):
-        q = (
-            transformed.writeStream.foreachBatch(_publish_batch)
-            .option("checkpointLocation", ck_dir)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return V.read_current(spark, table_dir)
+    _drain(transformed, output_mode, _publish_batch)
+    return V.read_current(transformed.sparkSession, table_dir)
 
 
 # --- transformations (batch- and stream-applicable) ---------------------------
@@ -596,15 +552,7 @@ def stream_to_parquet(
     /root/reference/sdk/migrate_employeur.php:60-68, here provided by
     the engine's write-ahead log). New files landing in the source dir
     are picked up incrementally by the next run."""
-    q = (
-        transformed.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(transformed, "append", "parquet", {"path": out_dir}, checkpoint_dir)
 
 
 def tws_available() -> bool:

@@ -406,6 +406,7 @@ def test_errors_keep_dataframe_context_without_call_sites(spark):
         "ml_naive_bayes",
         "docs_ccnet_buckets",
         "scan_json_corrupt_modes",
+        "scan_csv_corrupt_quarantine",
     ],
 )
 def test_query_leaves_nothing_cached(spark, name):
@@ -416,6 +417,79 @@ def test_query_leaves_nothing_cached(spark, name):
     spark.catalog.clearCache()
     QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_scratch_root_removed_at_exit(tmp_path):
+    """A directory from ``scratch_dir`` and the root that holds it are
+    gone once the interpreter that made them exits."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "from php_etl_spark.session import scratch_dir\n"
+        "d = scratch_dir('probe_')\n"
+        "open(d + '/f', 'w').close()\n"
+        "print(d)\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    made = out.stdout.strip()
+    assert made.startswith(str(tmp_path)), made
+    assert not os.path.exists(made)
+    assert os.listdir(tmp_path) == []
+
+
+def test_queries_write_only_under_scratch_root(spark, tmp_path, monkeypatch):
+    """Streaming checkpoints and the directories sink, scan and pipeline
+    keys write and read back all live under the one scratch root: the
+    temp dir holds nothing else after the keys ran."""
+    import os
+    import tempfile
+
+    from php_etl_spark import session
+    from tests.conftest import SF_DIR
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(session, "_SCRATCH_ROOT", [])
+    for k in (
+        "stream_tumbling",
+        "rollup_incremental",
+        "stream_python_datasource",
+        "scan_json_corrupt_modes",
+        "scan_csv_corrupt_quarantine",
+        "pipeline_etl_parallel",
+    ):
+        QUERIES[k](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    entries = os.listdir(tmp_path)
+    assert len(entries) == 1, entries
+    assert os.path.join(tmp_path, entries[0]) == session.scratch_root()
+
+
+def test_one_drain_one_scratch_root():
+    """The engine has one availableNow run loop and one scratch root:
+    each of these calls occurs once in the package source."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "php_etl_spark"
+    src = "".join(p.read_text() for p in sorted(pkg.rglob("*.py")))
+    counts = {
+        needle: src.count(needle)
+        for needle in (
+            "trigger(availableNow=True)",
+            "awaitTermination()",
+            "tempfile.mkdtemp(",
+            "atexit.register(",
+        )
+    }
+    assert set(counts.values()) == {1}, counts
 
 
 def test_local_cpus_reads_env_else_affinity(monkeypatch):

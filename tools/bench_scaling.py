@@ -41,7 +41,6 @@ from tools.scale_probe import release_storage  # noqa: E402
 
 
 def main() -> int:
-    os.environ.setdefault("SPARK_GRAFT_STREAM_PARTITIONS", "8")
     import bench
     from php_etl_spark import queries as Q
     from php_etl_spark.session import get_spark

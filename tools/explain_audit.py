@@ -1454,9 +1454,9 @@ def _stream_plan_via_capture(spark, sf_dir: str) -> str:
     explain output."""
     import contextlib
     import io
-    import tempfile
 
     from php_etl_spark.streaming.events import (
+        _drain,
         events_stream,
         purchase_click_interval_join,
     )
@@ -1464,13 +1464,7 @@ def _stream_plan_via_capture(spark, sf_dir: str) -> str:
     joined = purchase_click_interval_join(
         events_stream(spark, sf_dir), events_stream(spark, sf_dir)
     )
-    q = (
-        joined.writeStream.format("noop")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="audit_ck_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = _drain(joined, "append", "noop")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         q.explain(extended=True)
@@ -1538,8 +1532,6 @@ def _json_corrupt_scan_plan(spark, sf_dir: str) -> str:
     a driver-built two-row summary (counts are computed during frame
     construction), so pin the scan+filter that does the corpus-scale
     work."""
-    import tempfile
-
     from pyspark.sql import functions as F
     from pyspark.sql.types import (
         LongType,
@@ -1549,8 +1541,9 @@ def _json_corrupt_scan_plan(spark, sf_dir: str) -> str:
     )
 
     from php_etl_spark.catalog import Catalog
+    from php_etl_spark.session import scratch_dir
 
-    path = tempfile.mkdtemp(prefix="audit_json_") + "/nation.jsonl"
+    path = scratch_dir("audit_json_") + "/nation.jsonl"
     n = Catalog(spark, sf_dir).nation.select("n_nationkey", "n_name")
     good = [
         f'{{"n_nationkey": {r["n_nationkey"]}, "n_name": "{r["n_name"]}"}}'
@@ -1582,9 +1575,9 @@ def _stream_loj_plan_via_capture(spark, sf_dir: str) -> str:
     machinery lives in the streaming plan captured here)."""
     import contextlib
     import io
-    import tempfile
 
     from php_etl_spark.streaming.events import (
+        _drain,
         events_stream,
         purchase_click_interval_join,
     )
@@ -1594,13 +1587,7 @@ def _stream_loj_plan_via_capture(spark, sf_dir: str) -> str:
         events_stream(spark, sf_dir),
         "leftOuter",
     )
-    q = (
-        joined.writeStream.format("noop")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="audit_ck_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = _drain(joined, "append", "noop")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         q.explain(extended=True)

@@ -1208,6 +1208,8 @@ def streaming_state_probe(spark, args) -> None:
     import shutil
     import tempfile
 
+    from php_etl_spark.streaming.events import _drain
+
     rows_per_hour = args.stream_rows_per_hour
     n_hours = 12
     base = "TIMESTAMP'2024-01-01 00:00:00'"
@@ -1252,18 +1254,12 @@ def streaming_state_probe(spark, args) -> None:
                 .option("maxFilesPerTrigger", 1)
                 .parquet(data_dir)
             )
-            q = (
-                transform(src)
-                .writeStream.format("noop")
-                .outputMode("append")
-                .option(
-                    "checkpointLocation",
-                    os.path.join(ckpt_root, label),
-                )
-                .trigger(availableNow=True)
-                .start()
+            q = _drain(
+                transform(src),
+                "append",
+                "noop",
+                checkpoint_dir=os.path.join(ckpt_root, label),
             )
-            q.awaitTermination()
             progress = [p for p in q.recentProgress if p.get("stateOperators")]
             state_rows = [
                 p["stateOperators"][0]["numRowsTotal"]
@@ -1562,9 +1558,9 @@ def main() -> int:
     # shuffle. Frames are session-bound, so the thresholds live in a
     # newSession clone and the fact goes through parquet (bloom prunes
     # a file scan; a localCheckpoint scan has nothing to push into).
-    import tempfile
+    from php_etl_spark.session import scratch_dir
 
-    fact_dir = tempfile.mkdtemp(prefix="probe_bloom_") + "/fact"
+    fact_dir = scratch_dir("probe_bloom_") + "/fact"
     fact.write.mode("overwrite").parquet(fact_dir)
     s2 = spark.newSession()
     s2.conf.set(
@@ -1727,9 +1723,10 @@ def main() -> int:
     # 64 files, publish with per-file stats, serve a narrow range.
     # The pointer alone must prune ≥ 90% of files (no Spark job, no
     # data read to decide), and the answer must match the full scan.
+    from php_etl_spark.session import scratch_dir
     from php_etl_spark.sources import versioned as V
 
-    vdir = tempfile.mkdtemp(prefix="probe_vstats_") + "/t"
+    vdir = scratch_dir("probe_vstats_") + "/t"
     vbase = spark.range(args.rows).select(
         F.col("id").alias("k"), (F.col("id") % 997).alias("v")
     )
