@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from php_etl_spark.llm.text import normalized_hash, word_shingles
 from php_etl_spark.materialize import materialize, unmaterialize
+from php_etl_spark.operators.graph import capped_item_sets, pairs_in_group
 
 
 def exact_duplicates(
@@ -88,56 +89,18 @@ def jaccard_pairs(
 
 
 def _shingle_index_pairs(sets_df: DataFrame, max_doc_freq: int | None) -> DataFrame:
-    """Distinct (doc_a < doc_b) pairs sharing a shingle whose document
-    frequency is at most ``max_doc_freq`` (None: any frequency), from
-    one grouped pass over ``_shingle_sets`` output. Pairs stream in-row
-    (``_pairs_in_group``) instead of a two-sided self-join.
-
-    Bounded, each posting list is built by ``capped_item_sets`` with
-    cap ``max_doc_freq + 1``: rows ranked past the cap are dropped
-    before the collect, so a boilerplate shingle never buffers its
-    whole list in one task, and a list that reached the cap is exactly
-    one over ``max_doc_freq`` (shingle sets are distinct per doc, so
-    the list size is the df) and is dropped whole, as
-    ``cooccurrence_pairs`` drops over-cap baskets."""
-    from php_etl_spark.operators.graph import capped_item_sets
-
+    """Distinct (doc_a < doc_b) pairs sharing a shingle, from one
+    grouped pass over ``_shingle_sets`` output: the posting lists come
+    from ``capped_item_sets``, so a shingle held by more than
+    ``max_doc_freq`` docs (a shingle's list size is its document
+    frequency) is dropped whole before any pair is emitted, with
+    per-shingle state bounded by the cap; ``None`` keeps every
+    shingle."""
     sh = sets_df.select("doc", F.explode("sh").alias("shingle"))
-    if max_doc_freq is None:
-        postings = sh.groupBy("shingle").agg(
-            F.sort_array(F.collect_list("doc")).alias("ms")
-        ).filter(F.size("ms") >= 2)
-    else:
-        postings = capped_item_sets(
-            sh, "shingle", "doc", cap=max_doc_freq + 1, set_col="ms"
-        ).filter(F.size("ms").between(2, max_doc_freq))
     return (
-        _pairs_in_group(postings)
+        pairs_in_group(capped_item_sets(sh, "shingle", "doc", max_doc_freq))
         .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .distinct()
-    )
-
-
-def _pairs_in_group(members: DataFrame, list_col: str = "ms") -> DataFrame:
-    """Stream all (i < j) element pairs of a SORTED array column as
-    rows (a, b) — the shared r13 candidate-pair generator (guide
-    §2.4/§3.3): every inverted-index candidate step here used to be
-    an aliased self-join on the bucket key, which physically
-    recomputes the index subtree once per side (broadcast and stream
-    sides share no exchange) and shuffles it twice. Collecting each
-    bucket's membership once and emitting pairs in-row yields the
-    identical pair multiset — sorted array + (i < j) ⇔ join output
-    under a < b — with the index computed once and a single exchange.
-    posexplode + sliced explode streams the pairs row-group-
-    incrementally instead of materializing one k²/2 array per
-    bucket."""
-    return members.select(
-        list_col, F.posexplode(list_col).alias("i", "a")
-    ).select(
-        "a",
-        F.explode(
-            F.slice(F.col(list_col), F.col("i") + F.lit(2), F.size(list_col))
-        ).alias("b"),
     )
 
 
@@ -224,65 +187,32 @@ def lsh_candidates(
     max_bucket_size: int | None = 1000,
 ) -> DataFrame:
     """Band the signature (rows per (doc, band) = docs × bands) and
-    self-join per band bucket: two docs are candidates iff they agree
+    pair docs per band bucket: two docs are candidates iff they agree
     on EVERY row of at least one band — the classic S-curve knob
-    (bands=8, rows=4 → ~(j^4) per-band match prob).
+    (bands=8, rows=4 → ~(j^4) per-band match prob). Output distinct
+    (doc_a, doc_b), doc_a < doc_b.
 
-    ``max_bucket_size`` caps the per-(band, bucket) membership paired:
-    a bucket of k docs emits k²/2 pairs, so one boilerplate-heavy hot
-    bucket (empty pages, template text) can dominate the whole pass at
-    crawl scale. Docs in an oversized bucket almost always share their
-    OTHER bands' buckets too (they are near-identical by construction)
-    or are caught by exact dedup first, so capping costs little recall
-    while bounding pairs by bands × Σ min(bucket, cap)². Bounded by
-    DEFAULT (cap 1000, same policy as ``jaccard_pairs``); pass
-    ``max_bucket_size=None`` explicitly for the unbounded pairing.
+    A bucket of k docs emits k²/2 pairs, so one boilerplate-heavy hot
+    bucket (empty pages, template text) could dominate the whole pass
+    at crawl scale. Any (band, bucket) holding more than
+    ``max_bucket_size`` distinct docs is therefore DROPPED whole, never
+    truncated (``capped_item_sets``: state bounded by the cap before
+    the collect), which bounds pairs by bands × Σ_{k ≤ cap} k²/2. Docs
+    in a dropped bucket still pair wherever their OTHER bands collide.
+    Bounded by default (cap 1000, as ``jaccard_pairs``);
+    ``max_bucket_size=None`` pairs every bucket.
 
-    Pair generation is a single grouped pass, NOT a self-join: the
-    r13 plan audit showed the aliased a⋈b bucket join physically
-    recomputing the whole signature subtree (shingle explode + 32-min
-    aggregate + banding + cap window) once per side — broadcast and
-    stream sides of a self-join share no exchange, so nothing is
-    reused. Grouping each bucket's (capped) membership into a sorted
-    array and emitting (ds[i], ds[j]) for i<j in-row yields the exact
-    same pair set with the signature branch computed once, one fewer
-    exchange, and no join at all. Per-group state stays bounded by
-    the cap (the WindowGroupLimit sort keeps ≤cap rows per bucket
-    before the array is collected)."""
-    banded = _cap_buckets(
-        _band_table(signatures, n_hashes, bands), max_bucket_size
+    Each bucket's membership is grouped once and pairs stream in-row
+    (``pairs_in_group``), so the signature subtree is computed once
+    with no bucket self-join."""
+    buckets = capped_item_sets(
+        _band_table(signatures, n_hashes, bands),
+        ["band", "bucket"], "doc", max_bucket_size,
     )
-    # groupBy keys == the cap window's partition keys, so this
-    # aggregation reuses the window's exchange (no extra shuffle)
-    members = (
-        banded.groupBy("band", "bucket")
-        .agg(F.sort_array(F.collect_list("doc")).alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    # stream pairs per anchor (posexplode + sliced explode) instead of
-    # materializing the full k²/2 pair array per bucket in one value
     return (
-        _pairs_in_group(members, "ds")
+        pairs_in_group(buckets)
         .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
         .distinct()
-    )
-
-
-def _cap_buckets(banded: DataFrame, cap: int | None) -> DataFrame:
-    """Keep the first ``cap`` members per (band, bucket) — rank within
-    bucket is deterministic by doc id, and the window shares the join
-    key's shuffle, so the cap costs no extra exchange."""
-    if cap is None:
-        return banded
-    from pyspark.sql import Window as _W
-
-    rn = F.row_number().over(
-        _W.partitionBy("band", "bucket").orderBy(F.col("doc"))
-    )
-    return (
-        banded.withColumn("__rn", rn)
-        .filter(F.col("__rn") <= cap)
-        .drop("__rn")
     )
 
 
@@ -299,9 +229,10 @@ def minhash_lsh_pairs(
     """Subquadratic near-dup pipeline: MinHash → LSH banding →
     candidate pairs → exact Jaccard verification on candidates only.
     This is the shape that survives 100 TB; the exact all-pairs join
-    does not. Hot band-buckets are capped by default (see
-    ``lsh_candidates``); verification is always exact, so the cap
-    can only skip pairs, never mis-score one."""
+    does not. A (band, bucket) holding more than ``max_bucket_size``
+    distinct docs is dropped whole, never truncated (see
+    ``lsh_candidates``); verification is always exact, so the cap can
+    only skip pairs, never mis-score one."""
     # shingle ONCE: the materialized (doc, shingle-array) table feeds
     # both the signature branch and the verification branch (without
     # it, each branch re-tokenizes the corpus). materialize() picks
@@ -366,10 +297,11 @@ def incremental_near_dup(
     """Continuous-ingestion dedup: which NEW documents are near-dups
     of something ALREADY in the corpus — (new_doc, dup_of, jaccard)
     for exact Jaccard >= threshold among LSH band-bucket candidates.
-    The corpus side's hot buckets are capped by default (a boilerplate
+    A corpus (band, bucket) holding more than ``max_bucket_size``
+    distinct docs is dropped whole, never truncated
+    (``capped_item_sets``, as in ``lsh_candidates``): a boilerplate
     bucket in a web-scale corpus would otherwise multiply against
-    every batch; same bounded-by-default policy as ``jaccard_pairs``/
-    ``lsh_candidates``, ``None`` opts out).
+    every batch. ``None`` keeps every bucket.
 
     The join is batch-bands × corpus-bands on (band, bucket) — never a
     corpus self-join, so per-increment cost scales with the BATCH (the
@@ -381,19 +313,19 @@ def incremental_near_dup(
     the operator is self-contained."""
     corpus_sets = materialize(_shingle_sets(corpus, text_col, id_col, n))
     batch_sets = materialize(_shingle_sets(batch, text_col, id_col, n))
-    corpus_bands = _cap_buckets(
+    corpus_buckets = capped_item_sets(
         _band_table(
             _signatures_from_sets(corpus_sets, n_hashes), n_hashes, bands
         ),
-        max_bucket_size,
-    ).select(F.col("doc").alias("dup_of"), "band", "bucket")
+        ["band", "bucket"], "doc", max_bucket_size,
+    )
     batch_bands = _band_table(
         _signatures_from_sets(batch_sets, n_hashes), n_hashes, bands
     ).select(F.col("doc").alias("new_doc"), "band", "bucket")
     cands = (
-        batch_bands.join(corpus_bands, ["band", "bucket"])
+        batch_bands.join(corpus_buckets, ["band", "bucket"])
+        .select("new_doc", F.explode("ms").alias("dup_of"))
         .filter(F.col("new_doc") != F.col("dup_of"))
-        .select("new_doc", "dup_of")
         .distinct()
     )
     sa = batch_sets.select(F.col("doc").alias("new_doc"), F.col("sh").alias("sh_a"))
@@ -450,52 +382,43 @@ def hamming_near_pairs(
     (text SimHash, multimodal perceptual hash, ...): split 64 bits
     into max_distance+1 bands — any pair within the distance budget
     must agree exactly on >=1 band (pigeonhole), so candidates come
-    from band-bucket equi-joins, then exact popcount(xor)
-    verification. Output (doc_a, doc_b, hamming), doc_a < doc_b.
+    from band-bucket membership, then exact popcount(xor)
+    verification. Output (doc_a, doc_b, hamming), doc_a < doc_b;
+    rows with a null id are ignored.
 
-    ``max_bucket_size`` caps each (band, bucket) membership BEFORE it
-    is collected (r14, judge directive): a degenerate band bucket —
-    e.g. the all-zero band every boilerplate page shares — would
-    otherwise materialize one giant array value in a single
-    aggregation buffer before any pair is emitted (the pre-r13 join
-    streamed those pairs; the grouped pass must bound them instead).
-    Same bounded-by-default policy and the same window mechanism as
-    ``lsh_candidates``/``jaccard_pairs`` (the cap window spills where
-    an unbounded collect would OOM an executor); pass
-    ``max_bucket_size=None`` explicitly for the unbounded pairing.
-    Docs dropped from an oversized bucket still pair wherever their
-    OTHER max_distance bands collide."""
-    st = fp.select(
-        F.col(id_col).alias("doc"), F.col(hash_col).alias("simhash")
-    )
+    A (band, bucket) holding more than ``max_bucket_size`` distinct
+    (doc, fingerprint) members is dropped whole, never truncated
+    (``capped_item_sets``: state bounded by the cap before the
+    collect) — e.g. the all-zero band every boilerplate page shares
+    would otherwise build one giant array in a single aggregation
+    buffer. Docs in a dropped bucket still pair wherever their OTHER
+    bands collide. ``max_bucket_size=None`` pairs every bucket.
+
+    Each bucket's membership is grouped once and pairs stream in-row
+    (``pairs_in_group``), so the fingerprint subtree (for
+    ``simhash_pairs``, the 64-vote groupBy) is computed once with no
+    bucket self-join."""
     n_bands = max_distance + 1
     width = 64 // n_bands
     bands = [
         F.struct(
             F.lit(b).alias("band"),
-            F.shiftright(F.col("simhash"), b * width)
+            F.shiftright(F.col(hash_col), b * width)
             .bitwiseAND(F.lit((1 << width) - 1))
             .alias("bucket"),
         )
         for b in range(n_bands)
     ]
-    banded = st.select(
-        "doc", "simhash", F.explode(F.array(*bands)).alias("bb")
-    ).select("doc", "simhash", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    # grouped band-bucket membership + in-row pair streaming (r13,
-    # see _pairs_in_group): the aliased self-join recomputed the
-    # fingerprint subtree (for simhash_pairs, the 64-vote groupBy)
-    # once per side; one grouped pass computes it once. A doc appears
-    # once per band, so sorted-array (i < j) pairs on distinct docs
-    # reproduce exactly the join's doc_a < doc_b output. The cap
-    # window shares the groupBy's (band, bucket) exchange — no extra
-    # shuffle, bounded per-bucket state.
-    banded = _cap_buckets(banded, max_bucket_size)
-    members = banded.groupBy("band", "bucket").agg(
-        F.sort_array(F.collect_list(F.struct("doc", "simhash"))).alias("ms")
-    ).filter(F.size("ms") >= 2)
+    banded = fp.filter(F.col(id_col).isNotNull()).select(
+        F.struct(
+            F.col(id_col).alias("doc"), F.col(hash_col).alias("simhash")
+        ).alias("m"),
+        F.explode(F.array(*bands)).alias("bb"),
+    ).select("bb.band", "bb.bucket", "m")
     cands = (
-        _pairs_in_group(members)
+        pairs_in_group(
+            capped_item_sets(banded, ["band", "bucket"], "m", max_bucket_size)
+        )
         .select(
             F.col("a.doc").alias("doc_a"),
             F.col("b.doc").alias("doc_b"),
@@ -701,7 +624,6 @@ def cross_corpus_overlap(
     id_col: str = "doc_id",
     n: int = 3,
     min_overlap: int = 5,
-    max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Contamination detection: n-gram overlap between a training
     corpus and an evaluation set. Output: (train_doc, eval_doc,
@@ -712,21 +634,11 @@ def cross_corpus_overlap(
     Shape: inverted shingle index JOIN between the two corpora (never
     a self-join) — cost ∝ Σ_shingle df_train(s)·df_eval(s), and the
     eval side is benchmarks (tiny), so the join is effectively
-    broadcast-size at any training-corpus scale. ``max_doc_freq``
-    drops boilerplate shingles from the TRAIN index only (same
-    bounding argument as ``jaccard_pairs``)."""
+    broadcast-size at any training-corpus scale."""
     tr = (
         _shingle_sets(train, text_col, id_col, n)
         .select(F.col("doc").alias("train_doc"), F.explode("sh").alias("shingle"))
     )
-    if max_doc_freq is not None:
-        rare = (
-            tr.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") <= max_doc_freq)
-            .select("shingle")
-        )
-        tr = tr.join(rare, "shingle")
     ev = (
         _shingle_sets(eval_df, text_col, id_col, n)
         .select(F.col("doc").alias("eval_doc"), F.explode("sh").alias("shingle"))
@@ -996,30 +908,21 @@ def longest_duplicate_substrings(
         )
         .select("doc", (F.col("pos0") + 1).alias("pos"), "h")
     )
-    # One grouped pass replaces the df-cap groupBy + two-sided
-    # inverted-index self-join (r13, guide §2.4/§3.3): the join
-    # formulation computed the tokenize+gram-hash explode three times
-    # (once per join side plus the cap count) and shuffled it by h
-    # twice. Collecting each gram's (doc, pos) postings list bounds
-    # per-group state by ``max_df`` (the SAME cap the join applied),
-    # checks the cap on the collected size, and streams the cross-doc
-    # (i < j) pairs in-row from the sorted postings — the identical
-    # anchor-pair multiset (sorted by (doc, pos), i<j on distinct
-    # docs ⇔ join output filtered to doc_a < doc_b), with the gram
-    # subtree computed ONCE and a single exchange on h.
+    # Each gram's (doc, pos) postings are grouped once and the
+    # cross-doc (i < j) anchor pairs stream in-row: sorted by
+    # (doc, pos), i < j on distinct docs is the doc_a < doc_b anchor
+    # join. A gram with more than ``max_df`` postings is dropped whole.
+    # The postings are collected before that check, without the rank
+    # window of ``capped_item_sets``: its sort over every gram cost
+    # this headline key 7% more work CPU at sf0.1 (4 vCPUs, two
+    # interleaved pairs of min-of-5 timings).
     postings = (
         grams.groupBy("h")
         .agg(F.sort_array(F.collect_list(F.struct("doc", "pos"))).alias("ms"))
-        .filter((F.size("ms") >= 2) & (F.size("ms") <= max_df))
+        .filter(F.size("ms") <= max_df)
     )
     anchors = (
-        postings.select("ms", F.posexplode("ms").alias("i", "a"))
-        .select(
-            "a",
-            F.explode(
-                F.slice("ms", F.col("i") + F.lit(2), F.size("ms"))
-            ).alias("b"),
-        )
+        pairs_in_group(postings)
         .filter(F.col("a.doc") != F.col("b.doc"))
         .select(
             F.col("a.doc").alias("doc_a"),

@@ -8,9 +8,10 @@ ids — so it scales the way Spark joins scale, and each operator picks
 the algorithm whose join volume stays bounded at 100 TB:
 
 - degree distribution: one distinct + two aggregates.
-- co-occurrence pairs: self-join per basket — pairs ∝ Σ size², so
-  callers cap basket size (TPC-H orders are ≤7 items; a web corpus
-  would cap at ~100 before pairing).
+- co-occurrence pairs: one grouped pass per basket — pairs ∝ Σ size²,
+  so a basket over the cap is dropped whole before pairing
+  (``capped_item_sets``, shared with the dedup pair generators;
+  TPC-H orders hold ≤7 items).
 - triangle counting: degree-ordered orientation (each undirected edge
   directed from its lower-degree endpoint), the standard trick that
   bounds every node's out-degree by O(√m) and keeps the wedge join
@@ -23,7 +24,7 @@ the algorithm whose join volume stays bounded at 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from php_etl_spark.materialize import materialize
@@ -48,35 +49,48 @@ def degree_distribution(edges: DataFrame, src: str, dst: str) -> DataFrame:
 
 def capped_item_sets(
     df: DataFrame,
-    basket_col: str,
+    group_cols: str | list[str],
     item_col: str,
-    cap: int,
-    set_col: str = "_ms",
+    cap: int | None,
 ) -> DataFrame:
-    """(basket, sorted array of the basket's first ``cap`` DISTINCT
-    non-null items) — the bounded-buffer basket build under
-    ``cooccurrence_pairs``: ``dense_rank`` over the per-basket item
-    order counts distinct items (duplicate rows share a rank, so
-    dupes never eat the budget), and rows ranked past ``cap`` are
-    dropped BEFORE ``collect_set`` — per-basket executor state is
-    bounded by the cap, and the rank window spills to disk where an
-    unbounded collect_set buffer would OOM on a degenerate
-    mega-basket. Null items are filtered explicitly (collect_set
-    always excluded them; the filter makes the contract visible and
-    keeps dense_rank from ranking a null first). The window and the
-    groupBy share ONE basket-keyed exchange."""
-    from pyspark.sql import Window as _W
+    """(group_cols..., ms): each group's sorted array of DISTINCT
+    non-null ``item_col`` values — the one bounded-state build behind
+    every hot-group guard (co-occurrence baskets, shingle postings,
+    LSH and Hamming band buckets).
 
-    rn = F.dense_rank().over(
-        _W.partitionBy(basket_col).orderBy(item_col)
-    )
+    A group holding more than ``cap`` distinct items is DROPPED whole,
+    never truncated: its C(size, 2) pairs would dominate the Σ size²
+    pair volume, and a truncated group would pair an arbitrary subset.
+    ``dense_rank`` over the item order keeps at most ``cap + 1`` rows
+    per group before the collect (duplicate rows share a rank, so they
+    never use up the cap), so per-group executor state is bounded by
+    the cap and the rank window spills where an unbounded collect
+    would OOM on a degenerate group; a set that still holds
+    ``cap + 1`` items is exactly an over-cap group. ``cap=None``
+    collects every group whole. The window and the groupBy share one
+    exchange on the group keys."""
+    keys = [group_cols] if isinstance(group_cols, str) else list(group_cols)
+    rows = df.select(*keys, item_col).filter(F.col(item_col).isNotNull())
+    if cap is not None:
+        rank = F.dense_rank().over(Window.partitionBy(*keys).orderBy(item_col))
+        rows = rows.withColumn("_rank", rank).filter(F.col("_rank") <= cap + 1)
+    items = F.sort_array(F.collect_set(item_col)).alias("ms")
+    sets = rows.groupBy(*keys).agg(items)
+    return sets if cap is None else sets.filter(F.size("ms") <= cap)
+
+
+def pairs_in_group(sets: DataFrame) -> DataFrame:
+    """(a, b) rows: every i < j element pair of each SORTED array in
+    column ``ms`` (``capped_item_sets`` output), so a < b. Grouping once
+    and emitting pairs in-row replaces a group-key self-join, which
+    computes its input subtree once per side; posexplode + sliced
+    explode streams the pairs instead of building a k²/2 array per
+    group."""
+    later = F.slice("ms", F.col("i") + 2, F.size("ms"))
     return (
-        df.select(basket_col, item_col)
-        .filter(F.col(item_col).isNotNull())
-        .withColumn("_rn", rn)
-        .filter(F.col("_rn") <= cap)
-        .groupBy(basket_col)
-        .agg(F.sort_array(F.collect_set(item_col)).alias(set_col))
+        sets.filter(F.size("ms") >= 2)
+        .select("ms", F.posexplode("ms").alias("i", "a"))
+        .select("a", F.explode(later).alias("b"))
     )
 
 
@@ -86,46 +100,16 @@ def cooccurrence_pairs(
     item_col: str,
     max_basket: int = 128,
 ) -> DataFrame:
-    """Item pairs co-occurring in a basket, with occurrence counts.
+    """Item pairs co-occurring in a basket, with occurrence counts:
+    (item_a < item_b, n_cooc = number of baskets holding both).
 
-    Pair volume is Σ size(basket)² — bounded by dropping baskets
-    larger than ``max_basket`` (boilerplate carts/sessions), the same
-    guard the LSH path applies to hot buckets.
-
-    Shape (r13): one grouped pass — ``collect_set(item)`` per basket
-    absorbs the DISTINCT and its size is the basket guard; the (i<j)
-    pairs stream in-row through the shared posexplode generator
-    (llm.dedup._pairs_in_group; sorted set + i<j ⇔ the old join's
-    ``item_a < item_b``), so the pair multiset is identical. The
-    previous aliased self-join computed its distinct/count subtree
-    once per join side (broadcast build + stream sides share no
-    exchange) and broadcast a basket-table-sized build side — the
-    same duplicated-subtree shape removed from
-    graph_bipartite_copurchase this round, here shared by the twelve
-    graph/basket queries that build co-occurrence edges.
-
-    r14 (judge advice): the guard is enforced BEFORE the collect —
-    ``dense_rank`` over the per-basket item order counts distinct
-    items (duplicate rows share a rank, matching collect_set), and
-    rows ranked past ``max_basket + 1`` are dropped before any array
-    is built. A basket that still collects ``max_basket + 1`` items
-    is exactly one whose true distinct size exceeded the cap, so the
-    unchanged closing size filter drops it: the DROP semantics and
-    the output are identical for any input, but per-basket executor
-    state is now bounded by the cap + 1 — the rank window spills
-    where an unbounded collect_set buffer would OOM on a degenerate
-    mega-basket. Null items are filtered explicitly (collect_set
-    always excluded them; the filter makes that contract visible and
-    keeps dense_rank from counting a null). The window and the
-    groupBy share ONE basket-keyed exchange.
-    """
-    from php_etl_spark.llm.dedup import _pairs_in_group
-
-    baskets = capped_item_sets(
-        df, basket_col, item_col, cap=max_basket + 1, set_col="_ms"
-    ).filter(F.size("_ms").between(2, max_basket))
+    Pair volume is Σ size(basket)², so a basket with more than
+    ``max_basket`` distinct items (boilerplate carts, sessions) is
+    dropped whole by ``capped_item_sets``, which bounds per-basket
+    state by the cap before the collect. Duplicate rows count once
+    and null items are ignored."""
     return (
-        _pairs_in_group(baskets, "_ms")
+        pairs_in_group(capped_item_sets(df, basket_col, item_col, max_basket))
         .groupBy(F.col("a").alias("item_a"), F.col("b").alias("item_b"))
         .agg(F.count("*").alias("n_cooc"))
     )
@@ -476,8 +460,6 @@ def mst_boruvka(edges_w: DataFrame, max_rounds: int = 12) -> DataFrame:
     static-frame discipline pagerank uses); early-exits when no
     component has an outgoing edge left. Returns the forest edges
     (u, v, w), unordered."""
-    from pyspark.sql import Window
-
     from php_etl_spark.llm.dedup import duplicate_clusters
     from php_etl_spark.materialize import unmaterialize
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from php_etl_spark.llm import dedup as D
 from php_etl_spark.operators import graph as G
 
 
@@ -70,15 +71,77 @@ def test_cooccurrence_guard_truncates_before_collect(spark):
     assert got == expect
 
 
-def test_capped_item_sets_truncates_deterministically(spark):
-    """The shared basket build keeps the FIRST ``cap`` distinct items
-    in item order — the bounded state ``cooccurrence_pairs`` builds
-    its size guard on."""
+def test_capped_item_sets_drops_over_cap_groups(spark):
+    """The shared group build drops a group with more than ``cap``
+    distinct items whole, never keeping its first ``cap``; a group at
+    exactly the cap comes back sorted and distinct with nulls ignored;
+    ``cap=None`` keeps every group."""
     rows = [(1, i) for i in range(20, 0, -1)] + [(1, 5), (1, 7)]
+    rows += [(2, i) for i in (9, 3, 5, 3, 1, 7)] + [(2, None)]
     df = spark.createDataFrame(rows, "basket: long, item: long")
-    out = G.capped_item_sets(df, "basket", "item", cap=5, set_col="ms")
-    [r] = out.collect()
-    assert r["ms"] == [1, 2, 3, 4, 5]
+    out = G.capped_item_sets(df, "basket", "item", cap=5)
+    assert {r["basket"]: r["ms"] for r in out.collect()} == {2: [1, 3, 5, 7, 9]}
+    whole = G.capped_item_sets(df, "basket", "item", cap=None)
+    assert {r["basket"]: r["ms"] for r in whole.collect()} == {
+        1: list(range(1, 21)),
+        2: [1, 3, 5, 7, 9],
+    }
+
+
+def _cooccurrence_gen(spark, hot, cap):
+    rows = [(1, i) for i in hot] + [(2, 100), (2, 101)]
+    df = spark.createDataFrame(rows, "basket: long, item: long")
+    out = G.cooccurrence_pairs(df, "basket", "item", max_basket=cap)
+    return {(r["item_a"], r["item_b"]) for r in out.collect()}
+
+
+def _shingle_index_gen(spark, hot, cap):
+    # the hot group is the shingle "alpha beta gamma"; every other
+    # shingle of a doc is its own
+    rows = [(i, f"alpha beta gamma only{i} x{i}") for i in hot]
+    rows += [(i, f"delta epsilon zeta only{i} x{i}") for i in (100, 101)]
+    df = spark.createDataFrame(rows, "doc_id: long, text: string")
+    out = D.jaccard_pairs(df, n=3, threshold=0.0, max_doc_freq=cap)
+    return {(r["doc_a"], r["doc_b"]) for r in out.collect()}
+
+
+def _lsh_gen(spark, hot, cap):
+    # identical signatures share one bucket in each of the 2 bands
+    rows = [(i, *range(8)) for i in hot]
+    rows += [(i, *range(100, 108)) for i in (100, 101)]
+    schema = "doc: long, " + ", ".join(f"mh_{j}: long" for j in range(8))
+    df = spark.createDataFrame(rows, schema)
+    out = D.lsh_candidates(df, n_hashes=8, bands=2, max_bucket_size=cap)
+    return {(r["doc_a"], r["doc_b"]) for r in out.collect()}
+
+
+def _hamming_gen(spark, hot, cap):
+    # identical fingerprints share one bucket in each of the 4 bands
+    rows = [(i, 0) for i in hot] + [(100, -1), (101, -1)]
+    df = spark.createDataFrame(rows, "doc: long, simhash: long")
+    out = D.hamming_near_pairs(df, max_distance=3, max_bucket_size=cap)
+    return {(r["doc_a"], r["doc_b"]) for r in out.collect()}
+
+
+@pytest.mark.parametrize(
+    "gen",
+    [_cooccurrence_gen, _shingle_index_gen, _lsh_gen, _hamming_gen],
+    ids=["cooccurrence_pairs", "jaccard_pairs", "lsh_candidates",
+         "hamming_near_pairs"],
+)
+def test_pair_generators_drop_over_cap_groups(spark, gen):
+    """Every pair generator on ``capped_item_sets`` shares one cap
+    contract: a group with exactly ``cap`` distinct items yields all
+    C(cap, 2) pairs, one with ``cap + 1`` yields none, duplicate rows
+    do not use up the cap and null items are ignored. The control
+    group (100, 101) pairs in every case."""
+    cap = 4
+    full = {(a, b) for a in range(1, 5) for b in range(a + 1, 5)}
+    control = {(100, 101)}
+    assert gen(spark, [1, 2, 3, 4], cap) == full | control
+    assert gen(spark, [1, 2, 3, 4, 5], cap) == control
+    assert gen(spark, [4, 3, 2, 1] * 3, cap) == full | control
+    assert gen(spark, [1, None, 2, 3, None, 4], cap) == full | control
 
 
 def test_mst_drops_over_cap_order(spark, tmp_path):

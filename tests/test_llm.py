@@ -565,9 +565,10 @@ def test_repetition_stats_known_docs(spark):
 
 def test_lsh_bucket_cap_bounds_hot_buckets(spark):
     """A corpus of identical docs puts everything in one bucket per
-    band; the cap bounds candidate pairs at ~cap²/2 per band while an
-    uncapped join is quadratic. Near-dup recall on the normal corpus
-    is unaffected (buckets there are small)."""
+    band; a cap below the bucket size drops every such bucket whole,
+    so no pair survives, while an uncapped pass is quadratic. Near-dup
+    recall on the normal corpus is unaffected (buckets there are
+    small)."""
     same = spark.createDataFrame(
         [(i, "exactly the same text repeated again and again here") for i in range(200)],
         ["doc_id", "text"],
@@ -576,7 +577,7 @@ def test_lsh_bucket_cap_bounds_hot_buckets(spark):
     uncapped = D.lsh_candidates(sigs, 32, 8).count()
     capped = D.lsh_candidates(sigs, 32, 8, max_bucket_size=10).count()
     assert uncapped == 200 * 199 // 2
-    assert capped == 10 * 9 // 2  # same 10 survivors in every band
+    assert capped == 0  # 200 > 10 docs in every band's bucket: dropped
     # normal corpus: cap far above real bucket sizes changes nothing
     docs = _docs(spark)
     sigs2 = D.minhash_signatures(docs, n=3, n_hashes=32)
@@ -879,11 +880,11 @@ def test_semantic_dedup_kernel_matches_sql_bitwise(spark):
 
 
 def test_lsh_hot_bucket_capped_by_default(spark):
-    """lsh_candidates defaults to a bounded per-(band,bucket) join
-    (same policy as jaccard_pairs): a degenerate corpus where every
-    signature is identical (all docs share one text) must produce at
-    most cap^2/2-ish candidates per band under a small explicit cap,
-    and the default must be bounded (not None)."""
+    """lsh_candidates defaults to a bounded per-(band,bucket) pairing
+    (same policy as jaccard_pairs): in a degenerate corpus where every
+    signature is identical (all docs share one text), a small explicit
+    cap drops each band's one bucket whole, and the default must be
+    bounded (not None)."""
     import inspect
 
     from php_etl_spark.llm import dedup as D
@@ -904,21 +905,20 @@ def test_lsh_hot_bucket_capped_by_default(spark):
     )
     sigs = D.minhash_signatures(docs, n=3, n_hashes=8)
     capped = D.lsh_candidates(sigs, n_hashes=8, bands=2, max_bucket_size=5)
-    # 40 identical docs, cap 5: per band C(5,2)=10 pairs, 2 bands,
-    # dedup'd -> exactly 10 distinct pairs (same 5 survivors per band)
-    assert capped.count() == 10
+    # 40 identical docs, cap 5: both bands' buckets hold 40 > 5 docs,
+    # so both are dropped and no pair is emitted
+    assert capped.count() == 0
     unbounded = D.lsh_candidates(sigs, n_hashes=8, bands=2, max_bucket_size=None)
     assert unbounded.count() == 40 * 39 // 2
 
 
 def test_hamming_bucket_cap_bounds_hot_buckets(spark):
-    """r14 (judge directive): a degenerate band bucket — here 40
-    identical all-zero fingerprints, the boilerplate case — must be
-    capped BEFORE the grouped membership is collected, bounding the
-    per-bucket aggregation buffer. Capped: the same first-5 docs
-    survive every band, so exactly C(5,2) distinct pairs at hamming
-    0. Opt-out (None) reproduces the full pairing; the default is
-    bounded (not None)."""
+    """A degenerate band bucket — here 40 identical all-zero
+    fingerprints, the boilerplate case — holds more than the cap in
+    every band, so it is dropped whole and yields no pair, while the
+    small control bucket (docs 100, 101) pairs as before. Opt-out
+    (None) reproduces the full pairing; the default is bounded (not
+    None)."""
     import inspect
 
     from php_etl_spark.llm import dedup as D
@@ -930,14 +930,15 @@ def test_hamming_bucket_cap_bounds_hot_buckets(spark):
         == 1000
     )
     fp = spark.createDataFrame(
-        [(i, 0) for i in range(40)], "doc: long, simhash: long"
+        [(i, 0) for i in range(40)] + [(100, -1), (101, -1)],
+        "doc: long, simhash: long",
     )
     capped = D.hamming_near_pairs(fp, max_distance=3, max_bucket_size=5)
     assert sorted(
         (r["doc_a"], r["doc_b"], r["hamming"]) for r in capped.collect()
-    ) == [(a, b, 0) for a in range(5) for b in range(a + 1, 5)]
+    ) == [(100, 101, 0)]
     unbounded = D.hamming_near_pairs(fp, max_distance=3, max_bucket_size=None)
-    assert unbounded.count() == 40 * 39 // 2
+    assert unbounded.count() == 40 * 39 // 2 + 1
 
 
 def test_perceptual_hash_near_dup_finds_exact_payload_dups(spark):

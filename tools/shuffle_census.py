@@ -11,8 +11,14 @@ committed ledger ``tools/shuffle_budget.json``:
   - a query whose SHUFFLE count exceeds its recorded budget FAILS the
     run (a regression: someone added an exchange to a settled plan);
   - fewer shuffles than recorded prints an improvement note (re-record
-    to lock it in);
+    to lock it in), unless building the key launched jobs: shuffles
+    run in those eager construction jobs (``materialize()`` pins,
+    schema probes) are missing from the final plan, so such a key
+    prints as ``moved (N construction jobs)`` instead;
   - unknown keys print as new (re-record to adopt them).
+
+Construction jobs are counted per key with a job group and Spark's
+status tracker; the ledger itself records only the final plan.
 
 Broadcast counts are informational — broadcasts are the cheap
 alternative we WANT plans to pick, so only shuffle growth gates.
@@ -52,11 +58,17 @@ _SHUFFLE_RE = re.compile(
 
 
 def census(spark, sf_dir: str, names: list[str]) -> dict[str, dict[str, int]]:
+    """Per key: final-plan ``shuffles`` and ``broadcasts`` (the ledger
+    row) plus ``construction_jobs``, the jobs launched while the key's
+    frame and plan were built."""
     from php_etl_spark.queries import QUERIES
 
+    sc = spark.sparkContext
     out: dict[str, dict[str, int]] = {}
     for name in names:
         fn = QUERIES[name]
+        group = f"shuffle-census-{name}"
+        sc.setJobGroup(group, group)
         try:
             plan = (
                 fn(spark, sf_dir)
@@ -66,9 +78,13 @@ def census(spark, sf_dir: str, names: list[str]) -> dict[str, dict[str, int]]:
             print(f"ERROR {name}: {type(exc).__name__}: "
                   f"{str(exc).splitlines()[0][:120]}")
             continue
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         out[name] = {
             "shuffles": len(_SHUFFLE_RE.findall(plan)),
             "broadcasts": plan.count("BroadcastExchange"),
+            "construction_jobs": len(
+                sc.statusTracker().getJobIdsForGroup(group)),
         }
     return out
 
@@ -93,13 +109,16 @@ def main() -> int:
     got = census(spark, args.sf, names)
 
     if args.record:
-        merged = dict(got)
+        merged = {
+            name: {k: row[k] for k in ("shuffles", "broadcasts")}
+            for name, row in got.items()
+        }
         if args.names and os.path.exists(LEDGER):
             # subset record MERGES into the ledger — rewriting it with
             # only the named keys would silently drop every other
             # query's budget
             with open(LEDGER) as f:
-                merged = {**json.load(f), **got}
+                merged = {**json.load(f), **merged}
         with open(LEDGER, "w") as f:
             json.dump(dict(sorted(merged.items())), f, indent=1,
                       sort_keys=True)
@@ -113,7 +132,7 @@ def main() -> int:
     with open(LEDGER) as f:
         want = json.load(f)
 
-    regressions = improvements = new = 0
+    regressions = improvements = moved = new = 0
     for name, row in sorted(got.items()):
         base = want.get(name)
         if base is None:
@@ -124,6 +143,11 @@ def main() -> int:
             print(f"FAIL  {name}: shuffles {base['shuffles']} -> "
                   f"{row['shuffles']} (regression)")
             regressions += 1
+        elif row["shuffles"] < base["shuffles"] and row["construction_jobs"]:
+            print(f"note  {name}: shuffles {base['shuffles']} -> "
+                  f"{row['shuffles']} moved "
+                  f"({row['construction_jobs']} construction jobs)")
+            moved += 1
         elif row["shuffles"] < base["shuffles"]:
             print(f"note  {name}: shuffles {base['shuffles']} -> "
                   f"{row['shuffles']} (improved; re-record to lock in)")
@@ -133,7 +157,8 @@ def main() -> int:
         print(f"gone  {name}: in ledger but not in registry")
 
     print(f"\n{len(got)} queries checked: {regressions} regressions, "
-          f"{improvements} improvements, {new} new, {len(missing)} gone")
+          f"{improvements} improvements, {moved} moved, {new} new, "
+          f"{len(missing)} gone")
     return 1 if regressions else 0
 
 
